@@ -31,6 +31,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -40,9 +41,9 @@ R3 = {"cdc_replay_e2e": 20.733, "dedup_jaccard": 4.631, "sim_near_dup_cosine": 0
 
 
 def capture_once(out_path: str) -> dict:
-    """One fresh-JVM capture of the three weak queries; writes out_path."""
-    import subprocess
-
+    """One fresh-JVM capture of the three weak queries; writes out_path.
+    Raises RuntimeError, subprocess.TimeoutExpired (hung worker JVM) or
+    json.JSONDecodeError (partially written out_path)."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--worker", "--out", out_path],
@@ -146,8 +147,8 @@ def main() -> None:
         attempt_path = f"{args.out}.a{attempt}"
         try:
             rec = capture_once(attempt_path)
-        except RuntimeError as exc:
-            print(f"attempt {attempt}: {exc}", flush=True)
+        except (RuntimeError, subprocess.TimeoutExpired, json.JSONDecodeError) as exc:
+            print(f"attempt {attempt}: failed: {exc!r}", flush=True)
             rec = None
         if rec is not None:
             print(f"attempt {attempt}: {json.dumps(rec)}", flush=True)
@@ -159,7 +160,14 @@ def main() -> None:
             print("clean capture recorded", flush=True)
             break
         if args.no_wait or (time.monotonic() - start) / 60 > args.max_min:
-            print("stopping: budget exhausted; best attempt kept", flush=True)
+            if best is None:
+                # never leave an older run's --out looking like this run's
+                if os.path.exists(args.out):
+                    os.unlink(args.out)
+                print(f"stopping: no capture produced; {args.out} not written",
+                      flush=True)
+            else:
+                print("stopping: budget exhausted; best attempt kept", flush=True)
             break
         print("capture not clean; resuming the wait loop", flush=True)
 

@@ -356,22 +356,26 @@ def main() -> None:
                 # threads for short trials)
                 load_before = round(os.getloadavg()[0], 1)
                 membw_before = _membw_gbps() if args.min_membw is not None else None
-                out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), "--worker-cpus", str(cpus),
-                     "--log-dir", log_dir, "--n-buckets", str(args.n_buckets),
-                     "--mode", args.mode, "--data-dir", d],
-                    capture_output=True, text=True, timeout=3600,
-                )
-                line = next(
+                try:
+                    out = subprocess.run(
+                        [sys.executable, os.path.abspath(__file__), "--worker-cpus", str(cpus),
+                         "--log-dir", log_dir, "--n-buckets", str(args.n_buckets),
+                         "--mode", args.mode, "--data-dir", d],
+                        capture_output=True, text=True, timeout=3600,
+                    )
+                except subprocess.TimeoutExpired:
+                    out = None  # a hung worker JVM is a failed attempt
+                line = None if out is None else next(
                     (ln for ln in out.stdout.splitlines() if ln.startswith("WORKER_RESULT ")),
                     None,
                 )
                 if line is not None:
                     break
-                sys.stderr.write(out.stdout[-2000:] + out.stderr[-4000:])
+                if out is not None:
+                    sys.stderr.write(out.stdout[-2000:] + out.stderr[-4000:])
                 sys.stderr.write(
-                    f"\nworker local[{cpus}] died (attempt {attempt + 1}/3); "
-                    "retrying in a fresh JVM\n",
+                    f"\nworker local[{cpus}] {'hung' if out is None else 'died'} "
+                    f"(attempt {attempt + 1}/3); retrying in a fresh JVM\n",
                 )
                 sys.stderr.flush()
                 time.sleep(30)

@@ -6,27 +6,39 @@ extended with the event-count/lag metrics the north_rule requires.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, functions as F
+import os
 
+from pyspark.sql import SparkSession
+
+from go_cdc_spark import schemas
 from go_cdc_spark.bookmark import BookmarkStore
+from go_cdc_spark.sources.oplog import list_segments
 
 
 def replication_lag(
     spark: SparkSession, log_dir: str, bookmarks: BookmarkStore
 ) -> dict:
     """Lag = max source position − max applied position (in events and
-    in log seconds)."""
-    src = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(log_dir)
-        .agg(
-            F.max(F.struct("ts_t", "ts_i", "seq")).alias("m"),
-            F.count("*").alias("n"),
-        )
-        .collect()[0]
-    )
+    in log seconds).
+
+    Segment numbering is monotone with the order tuple
+    (``sources/oplog.py``), so the source high-water mark is the max
+    tuple of the NEWEST segment alone: its three order columns are read
+    on the driver with pyarrow — O(segment), not O(log), and no Spark
+    job. ``spark`` is unused and kept for API compatibility."""
+    import pyarrow.dataset as ds
+
+    segments = list_segments(log_dir)
+    src_pos = schemas.ZERO_TOKEN
+    if segments:
+        seg = ds.dataset(
+            os.path.join(log_dir, f"segment={segments[-1]}"), format="parquet"
+        ).to_table(columns=schemas.ORDER_COLS)
+        if seg.num_rows:
+            src_pos = max(
+                zip(*(seg.column(c).to_pylist() for c in schemas.ORDER_COLS))
+            )
     applied = bookmarks.latest_token()
-    src_pos = (src["m"]["ts_t"], src["m"]["ts_i"], src["m"]["seq"]) if src["m"] else (0, 0, -1)
     return {
         "source_hwm": src_pos,
         "applied_hwm": applied,

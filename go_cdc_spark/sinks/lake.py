@@ -43,8 +43,11 @@ deltas — O(batch) bytes written per epoch, the ingest-throughput mode.
   (retry no-ops). ≙ upgrading the reference's at-least-once resume
   token (resume_token_store.go:33-58) to exactly-once.
 - Additive schema evolution: the manifest carries the table schema;
-  batches with extra nullable payload columns widen it, and old data
-  files are null-padded at read (go_cdc_spark/evolve.py).
+  batches with extra nullable payload columns widen it
+  (go_cdc_spark/evolve.py). Every scan is planned from the manifest
+  alone: one parquet scan over all base and delta pointers with the
+  manifest's schema, so no schema-inference job runs; the reader
+  null-pads columns older files lack and widens int columns to long.
 - Order-aware rows: data files physically store the event-order tuple
   (ts_t, ts_i, seq) + op alongside the payload, and deletes persist as
   tombstones. MERGE therefore tolerates out-of-order and re-delivered
@@ -53,6 +56,14 @@ deltas — O(batch) bytes written per epoch, the ingest-throughput mode.
   older event. ``read()`` exposes the live logical view (tombstones
   filtered, internal columns dropped); ``read(internal=True)`` is the
   MERGE-side view.
+- One merge: every write that folds rows (an epoch's MERGE, compaction,
+  rebucket, snapshot overwrite) is ``_merge`` — LWW over batch events ∪
+  the unfolded current rows of the buckets being rewritten, planned as
+  ONE exchange (hash by bucket) shared by the reduce and the write.
+  ≙ ``MERGE INTO t USING batch ON key WHEN MATCHED AND op='d' THEN
+  DELETE WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED AND op!='d'
+  THEN INSERT *`` (reference query_generator.go:50-63), made
+  order-aware: a stored row only loses to a strictly newer event.
 """
 
 from __future__ import annotations
@@ -68,10 +79,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from go_cdc_spark import schemas
 from go_cdc_spark.evolve import align_to_schema, union_schema
-from go_cdc_spark.operators.merge import merge_resolved
 from go_cdc_spark.operators.resolve import lww_resolve
-
-_BUCKET = "_bucket"
 
 # Newest epoch keys kept inline in the manifest; older keys spill to
 # chained rollup files (see ParquetLakeTable._epochs_after_commit).
@@ -286,9 +294,7 @@ class ParquetLakeTable:
         # map stays O(live dirs), not O(history).
         pending = getattr(self, "_pending_stats", None)
         pending_fs = getattr(self, "_pending_file_stats", None)
-        pending_dir = (
-            getattr(self, "_pending_stats_dir", None) or f"data/v{m['version']}"
-        )
+        pending_dir = getattr(self, "_pending_stats_dir", None)
         # pending stats are consumed unconditionally (success OR
         # conflict) so a later commit that writes no data can never
         # attach a stale batch's stats; compact's conflict-rebase
@@ -395,11 +401,6 @@ class ParquetLakeTable:
             "epochs_rolled": m.get("epochs_rolled", 0) + len(spill),
         }
 
-    def payload_cols(self, schema: T.StructType | None = None) -> list[str]:
-        s = schema or self.schema
-        keys = set(self.key_cols)
-        return [f.name for f in s.fields if f.name not in keys]
-
     # ---------- read ----------
 
     def read(
@@ -418,7 +419,7 @@ class ParquetLakeTable:
         default is the live logical view (tombstones filtered, order
         columns dropped).
 
-        In ``mor`` mode the scan unions base + delta files and
+        In ``mor`` mode the one scan covers base + delta files and
         LWW-reduces to one row per key (the read-side half of
         merge-on-read); compaction bounds the delta count per bucket,
         so read amplification is ≤ ``compact_every`` small files.
@@ -439,12 +440,51 @@ class ParquetLakeTable:
         predicate on the result (pruning is file-granular), and note
         a range drops NULL-valued rows like the SQL predicate would.
         Delta-carrying buckets and files without bounds are read
-        whole — conservative, never lossy."""
+        whole — conservative, never lossy.
+
+        The plan comes from the manifest alone (see ``_scan``): building
+        the returned DataFrame launches no Spark job."""
         m = manifest or self.manifest()
         logical = T.StructType.fromJson(json.loads(m["schema"]))
-        order_cols = m.get("order_cols", schemas.ORDER_COLS)
         key_cols = m["key_cols"]
-        schema = internal_schema(logical, key_cols, order_cols)
+        out, has_deltas = self._scan(
+            m, buckets, changed_after=changed_after, prune_ranges=prune_ranges
+        )
+        if has_deltas:  # fold deltas: newest event per key wins
+            payload = [
+                f.name for f in logical.fields if f.name not in set(key_cols)
+            ]
+            out = lww_resolve(
+                out, key_cols, m.get("order_cols", schemas.ORDER_COLS), payload,
+                validate=False,
+            )
+        if internal:
+            return out
+        return out.filter(
+            F.coalesce(F.col("op"), F.lit("")) != schemas.DELETE_OP
+        ).select(*[f.name for f in logical.fields])
+
+    def _scan(
+        self,
+        m: dict,
+        buckets: list[int] | None = None,
+        schema: T.StructType | None = None,
+        changed_after: tuple[int, int, int] | None = None,
+        prune_ranges: dict[str, tuple] | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """Unfolded internal rows of ``m``'s base and delta pointers
+        (pruned as in ``read``): ONE parquet scan over every bucket path,
+        read with ``schema`` (default: ``m``'s internal schema). The
+        schema comes from the manifest, so no inference job runs; the
+        reader null-pads columns a file lacks and widens int columns to
+        long. Returns the rows and whether a delta was scanned — only
+        then can a key have several rows."""
+        if schema is None:
+            schema = internal_schema(
+                T.StructType.fromJson(json.loads(m["schema"])),
+                m["key_cols"],
+                m.get("order_cols", schemas.ORDER_COLS),
+            )
         wanted = {str(b) for b in buckets} if buckets is not None else None
         pointers = m["buckets"]
         deltas = m.get("deltas", {})
@@ -460,49 +500,19 @@ class ParquetLakeTable:
             file_sel = prune_files_by_ranges(
                 pointers, deltas, m.get("file_stats", {}), prune_ranges
             )
-        # group buckets by the version dir holding their data (base
-        # pointers and delta pointers alike — one scan per dir)
-        by_dir: dict[str, list[str]] = {}
-        for b, d in pointers.items():
-            by_dir.setdefault(d, []).append(b)
-        has_deltas = False
-        for b, ds in deltas.items():
-            for d in ds:
-                has_deltas = True
-                by_dir.setdefault(d, []).append(b)
-        parts = []
-        for d, bs in sorted(by_dir.items()):
-            base = os.path.join(self.root, d)
-            paths = []
-            for b in sorted(set(bs), key=int):
-                bdir = os.path.join(base, f"bucket={b}")
-                sel = file_sel.get((d, b))
-                if sel is None:
-                    paths.append(bdir)
-                else:  # file-level prune; [] ⇒ whole bucket skipped
-                    paths.extend(os.path.join(bdir, f) for f in sel)
-            if not paths:
-                continue
-            df = self.spark.read.option("basePath", base).parquet(*paths).drop("bucket")
-            parts.append(align_to_schema(df, schema))
-        if not parts:
-            out = self.spark.createDataFrame([], schema=schema)
-        else:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-        if has_deltas:  # fold deltas: newest event per key wins
-            payload = [
-                f.name for f in logical.fields if f.name not in set(key_cols)
-            ]
-            out = lww_resolve(
-                out, key_cols, order_cols, payload, validate=False
-            )
-        if internal:
-            return out
-        return out.filter(
-            F.coalesce(F.col("op"), F.lit("")) != schemas.DELETE_OP
-        ).select(*[f.name for f in logical.fields])
+        dirs = sorted(
+            [(d, b) for b, d in pointers.items()]
+            + [(d, b) for b, ds in deltas.items() for d in ds]
+        )
+        paths = []
+        for d, b in dirs:
+            bdir = os.path.join(self.root, d, f"bucket={b}")
+            sel = file_sel.get((d, b))
+            if sel is None:
+                paths.append(bdir)
+            else:  # file-level prune; [] ⇒ whole bucket skipped
+                paths.extend(os.path.join(bdir, f) for f in sel)
+        return self.spark.read.schema(schema).parquet(*paths), bool(deltas)
 
     def changes_between(self, m_old: dict, m_new: dict) -> DataFrame:
         """Change-data-feed read: the net row-level changes between two
@@ -585,20 +595,68 @@ class ParquetLakeTable:
 
     # ---------- write paths ----------
 
+    def _merge(
+        self,
+        rows: DataFrame,
+        m: dict,
+        n_buckets: int,
+        n_parts: int,
+        salt_partitions: int | None = None,
+    ) -> DataFrame:
+        """The one MERGE: LWW-reduce internal ``rows`` — batch events
+        (raw or pre-reduced; max-struct is associative) ∪ the unfolded
+        current rows of the buckets being rewritten — to one row per key
+        with its ``bucket`` column, laid out for ``_write_version_data``.
+
+        Unsalted it plans ONE exchange: ``rows`` are hash-partitioned
+        once by bucket (and by file slot when ``files_per_bucket`` > 1);
+        bucket is a function of the key, so ``groupBy(bucket, key)`` and
+        the bucket-partitioned write both reuse that partitioning. The
+        salted reduce (``lww_resolve(salt_partitions=)``) keeps its two
+        shuffles on the key for pathological hot keys, and its output is
+        repartitioned by bucket for the write. Deletes stay as
+        tombstones (op='d') carrying their order tuple."""
+        key_cols = m["key_cols"]
+        order_cols = m.get("order_cols", schemas.ORDER_COLS)
+        payload = [
+            c for c in rows.columns if c not in {*key_cols, *order_cols, "op"}
+        ]
+        fpb = int(m.get("files_per_bucket", 1))
+        rows = rows.withColumn("bucket", bucket_expr(key_cols, n_buckets))
+        part = ["bucket"]
+        if fpb > 1:  # split each bucket into fpb files by key hash
+            rows = rows.withColumn(
+                "_file", F.pmod(F.xxhash64(*key_cols), F.lit(fpb))
+            )
+            part.append("_file")
+        n = max(n_parts * fpb, 1)
+        groups = [*part, *key_cols]
+        if salt_partitions and salt_partitions > 1:
+            out = lww_resolve(
+                rows, groups, order_cols, payload,
+                salt_partitions=salt_partitions, validate=False,
+            ).repartition(n, *part)
+        else:
+            out = lww_resolve(
+                rows.repartition(n, *part), groups, order_cols, payload,
+                validate=False,
+            )
+        return out.drop("_file")
+
     def _write_version_data(
         self,
         df: DataFrame,
-        version: int,
+        m: dict,
+        rel_dir: str,
         n_files_hint: int,
         cluster_by: list[str] | None = None,
         cluster_files: int = 8,
-        rel_dir: str | None = None,
     ) -> dict[int, int]:
-        """Write df (must carry ``bucket`` col) under ``rel_dir``
-        (default data/v{version} — compaction passes a unique name so a
-        concurrent ingest writer racing to the same next version can
-        never overwrite its files); returns per-bucket row counts read
-        back from the written files.
+        """Write ``_merge`` output (carries ``bucket``, partitioned by
+        it) under ``rel_dir`` — a unique dir per commit attempt, so a
+        concurrent writer racing to the same next version can never
+        overwrite its files; returns per-bucket row counts read back
+        from the written files.
 
         ``cluster_by`` (compaction only) range-clusters each bucket's
         rows into ~``cluster_files`` files by the given columns (ntile
@@ -607,9 +665,7 @@ class ParquetLakeTable:
         and ``read(prune_ranges=...)`` can skip whole files — the
         bucket layout (key hash) is untouched, only how a bucket's
         rows split into files changes, which MERGE never observes."""
-        rel = rel_dir or f"data/v{version}"
-        out_dir = os.path.join(self.root, *rel.split("/"))
-        fpb = int(self.manifest().get("files_per_bucket", 1))
+        out_dir = os.path.join(self.root, *rel_dir.split("/"))
         # mode=overwrite: a data dir without a manifest is garbage from a
         # crashed attempt — the retry must be able to reclaim it (the
         # manifest rename, not the data write, is the commit point).
@@ -666,16 +722,7 @@ class ParquetLakeTable:
                 .sortWithinPartitions("bucket", *cluster_by)
             )
         else:
-            part_cols = [F.col("bucket")]
-            if fpb > 1:
-                part_cols.append(
-                    F.pmod(
-                        F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(fpb)
-                    )
-                )
-            staged = df.repartition(
-                max(n_files_hint * fpb, 1), *part_cols
-            ).sortWithinPartitions("bucket")
+            staged = df.sortWithinPartitions("bucket")
         try:
             staged.write.partitionBy("bucket").mode("overwrite").parquet(out_dir)
         finally:
@@ -693,7 +740,7 @@ class ParquetLakeTable:
 
         import pyarrow.parquet as pq
 
-        order0 = self.order_cols[0]
+        order0 = m.get("order_cols", schemas.ORDER_COLS)[0]
         stat_cols = [order0] + [c for c in (cluster_by or []) if c != order0]
 
         def footer(w):
@@ -723,7 +770,7 @@ class ParquetLakeTable:
         fstats: dict[str, dict[str, dict[str, list]]] = {}
         self._pending_stats = {}
         self._pending_file_stats = {} if cluster_by else None
-        self._pending_stats_dir = rel
+        self._pending_stats_dir = rel_dir
         if not os.path.isdir(out_dir):
             return counts
         work = []  # (bucket, file path)
@@ -909,17 +956,18 @@ class ParquetLakeTable:
         if not target or epoch_key in m["epochs"]:
             return CommitStats(m["version"], epoch_key, applied=False)
         version = m["version"] + 1
-        # read(internal=True) LWW-folds base+deltas and keeps tombstones
-        folded = self.read(buckets=target, manifest=m, internal=True).withColumn(
-            "bucket", bucket_expr(m["key_cols"], m["n_buckets"])
+        # the unfolded base+delta rows, LWW-folded by the one merge
+        # (tombstones kept)
+        folded = self._merge(
+            self._scan(m, target)[0], m, m["n_buckets"], len(target)
         )
         # unique dir: an ingest writer racing to the same next version
-        # writes data/v{version} — it must never clobber the fold (a
-        # crashed attempt leaves an orphan uuid dir; vacuum reclaims it)
+        # must never clobber the fold (a crashed attempt leaves an
+        # orphan uuid dir; vacuum reclaims it)
         data_dir = f"data/v{version}-c{uuid.uuid4().hex[:8]}"
         counts = self._write_version_data(
-            folded, version, len(target), cluster_by=cluster_by,
-            cluster_files=cluster_files, rel_dir=data_dir,
+            folded, m, data_dir, len(target), cluster_by=cluster_by,
+            cluster_files=cluster_files,
         )
         def _manifest_on(base: dict, v: int) -> dict:
             bucket_ptrs = dict(base["buckets"])
@@ -1011,27 +1059,42 @@ class ParquetLakeTable:
 
         The serving-path read (≙ a replica point query): hash each
         requested key to its bucket DRIVER-side (same xxhash64 the
-        writer used, evaluated on a tiny local DataFrame — no job
-        against the table), then scan ONLY those buckets with the key
+        writer used), then scan ONLY those buckets with the key
         predicate pushed into the parquet scan. I/O is O(requested
         buckets), not O(table): at 10k buckets a 5-key lookup touches
         ≤5/10000 of the data regardless of table size. Intended for
         small, explicit key lists (an operator debugging a key, a
         spot-check job); set-membership at scale should join against
-        the bucketed table instead."""
+        the bucketed table instead.
+
+        The keys are hashed on an inline ``VALUES`` relation whose
+        parameters are cast to their column types (so each hashes like
+        the stored value): the optimizer folds the hash into a local
+        relation, so neither the hashing nor building the result
+        launches a Spark job or a Python worker."""
         m = self.manifest()
         key_cols = m["key_cols"]
         if not key_values:
             raise ValueError("lookup needs at least one key tuple")
-        by_name = {f.name: f for f in self.schema.fields}
-        keys_df = self.spark.createDataFrame(
-            [tuple(k) for k in key_values],
-            schema=T.StructType([by_name[c] for c in key_cols]),
+        types = {
+            f.name: f.dataType.simpleString()
+            for f in T.StructType.fromJson(json.loads(m["schema"])).fields
+        }
+        args: dict[str, object] = {}
+        tuples = []
+        for i, k in enumerate(key_values):
+            cells = []
+            for j, (c, v) in enumerate(zip(key_cols, k)):
+                args[f"k{i}_{j}"] = v
+                cells.append(f"CAST(:k{i}_{j} AS {types[c]})")
+            tuples.append(f"({', '.join(cells)})")
+        names = ", ".join(f"`{c}`" for c in key_cols)
+        keys_df = self.spark.sql(
+            f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})", args=args
         )
-        wanted = keys_df.select(
-            bucket_expr(key_cols, m["n_buckets"]).alias("b")
-        ).distinct()
-        buckets = sorted(r["b"] for r in wanted.collect())  # ≤ len(keys)
+        buckets = sorted(
+            {r[0] for r in keys_df.select(bucket_expr(key_cols, m["n_buckets"])).collect()}
+        )
         pred = None
         for k in key_values:
             eq = None
@@ -1070,9 +1133,7 @@ class ParquetLakeTable:
         if epoch_key in m["epochs"]:
             return CommitStats(m["version"], epoch_key, applied=False)
         version = m["version"] + 1
-        folded = self.read(manifest=m, internal=True).withColumn(
-            "bucket", bucket_expr(m["key_cols"], new_n_buckets)
-        )
+        folded = self._merge(self._scan(m)[0], m, new_n_buckets, new_n_buckets)
         # unique dir, like compact(): rebucket is a maintenance op that
         # can race an ingest writer to the same next version — its data
         # must be unclobberable. Unlike compact there is no rebase (a
@@ -1080,9 +1141,7 @@ class ParquetLakeTable:
         # manifest CAS fails loudly and the caller re-runs; the orphan
         # dir is vacuumed.
         data_dir = f"data/v{version}-r{uuid.uuid4().hex[:8]}"
-        counts = self._write_version_data(
-            folded, version, new_n_buckets, rel_dir=data_dir
-        )
+        counts = self._write_version_data(folded, m, data_dir, new_n_buckets)
         self._write_manifest(
             {
                 **m,
@@ -1125,23 +1184,20 @@ class ParquetLakeTable:
         order_cols = m.get("order_cols", schemas.ORDER_COLS)
         internal = set(order_cols) | {"op", "bucket"}
         schema = union_schema(
-            self.schema,
+            T.StructType.fromJson(json.loads(m["schema"])),
             T.StructType([f for f in df.schema.fields if f.name not in internal]),
         )
         version = m["version"] + 1
         # snapshot rows carry their creation stamp when the source has
         # one (≙ dumper.go:85 stamping the token from createdAt), else
         # order=-1: "older than any replayed event".
-        phys = internal_schema(schema, self.key_cols, order_cols)
+        phys = internal_schema(schema, m["key_cols"], order_cols)
         data = align_to_schema(df, phys)
         if "op" not in df.columns:
             data = data.withColumn("op", F.lit(schemas.UPDATE_OP))
         for c in order_cols:
             if c not in df.columns:
                 data = data.withColumn(c, F.lit(-1).cast("long"))
-        data = data.select(*[f.name for f in phys.fields]).withColumn(
-            "bucket", bucket_expr(self.key_cols, self.n_buckets)
-        )
         # unique dir per attempt: two ingest writers racing to the same
         # next version must never share a data dir — the CAS loser's
         # mode('overwrite') would have already clobbered the winner's
@@ -1150,7 +1206,8 @@ class ParquetLakeTable:
         # reload-and-retry after a commit conflict is safe.
         data_dir = f"data/v{version}-i{uuid.uuid4().hex[:8]}"
         counts = self._write_version_data(
-            data, version, self.n_buckets, rel_dir=data_dir
+            self._merge(data, m, m["n_buckets"], m["n_buckets"]),
+            m, data_dir, m["n_buckets"],
         )
         self._write_manifest(
             {
@@ -1180,19 +1237,24 @@ class ParquetLakeTable:
         """MERGE one batch of change events (raw or pre-reduced; the
         merge reduce collapses either — max-struct associativity).
 
-        Copy-on-write rewrites affected buckets only; merge-on-read
-        appends reduced deltas. Exactly-once via the epoch check +
-        atomic manifest rename. Pass ``affected`` (the batch's distinct
-        bucket ids) when the caller already computed them — saves one
-        job per epoch. ``salt_partitions`` → two-phase reduce for
-        pathological hot keys.
+        One path for both modes: ``_merge`` over the batch ∪ the
+        unfolded current rows of the buckets this epoch rewrites —
+        every affected bucket under copy-on-write; under merge-on-read
+        only the affected buckets that reach the delta budget
+        (compacted into a new base), while the others receive the
+        reduced batch as a delta (O(batch) bytes written). One exchange
+        per epoch (two tiers when salted). Exactly-once via the epoch
+        check + atomic manifest rename. Pass ``affected`` (the batch's
+        distinct bucket ids) when the caller already computed them —
+        saves one job per epoch. ``salt_partitions`` → two-phase reduce
+        for pathological hot keys.
         """
         m = self.manifest()
         if epoch_key in m["epochs"]:  # recent-window dup check; old epochs are skipped at orchestration via committed_epochs()
             return CommitStats(m["version"], epoch_key, applied=False)
 
         key_cols = m["key_cols"]
-        table_schema = self.schema
+        table_schema = T.StructType.fromJson(json.loads(m["schema"]))
         batch_payload = T.StructType(
             [
                 f
@@ -1206,16 +1268,15 @@ class ParquetLakeTable:
                 [f for f in table_schema.fields if f.name in key_cols] + batch_payload.fields
             ),
         )
-        payload = self.payload_cols(new_schema)
 
-        if "bucket" in resolved.columns:
-            batch = resolved
-        else:
-            batch = resolved.withColumn("bucket", bucket_expr(key_cols, self.n_buckets))
         if affected is None:
             # Affected-bucket set: tiny (≤ n_buckets ints), safe to collect.
+            bucket = (
+                F.col("bucket") if "bucket" in resolved.columns
+                else bucket_expr(key_cols, m["n_buckets"])
+            )
             affected = sorted(
-                r["bucket"] for r in batch.select("bucket").distinct().collect()
+                r[0] for r in resolved.select(bucket).distinct().collect()
             )
         else:
             affected = sorted(affected)
@@ -1226,11 +1287,6 @@ class ParquetLakeTable:
                  **self._epochs_after_commit(m, epoch_key, version)}
             )
             return CommitStats(version, epoch_key, True)
-
-        phys = internal_schema(new_schema, key_cols, order_cols)
-        for f in new_schema.fields:  # null-pad payload cols the batch lacks
-            if f.name not in batch.columns:
-                batch = batch.withColumn(f.name, F.lit(None).cast(f.dataType))
 
         version = m["version"] + 1
         # unique dir per attempt (same reason as compact/overwrite): an
@@ -1243,49 +1299,27 @@ class ParquetLakeTable:
         bucket_counts = dict(m["bucket_counts"])
         deltas = {b: list(ds) for b, ds in m.get("deltas", {}).items()}
         delta_counts = dict(m.get("delta_counts", {}))
-        mode = m.get("mode", "cow")
-
-        if mode == "mor":
-            # Buckets that would exceed the delta budget get compacted
-            # (base+deltas+batch folded into a new base); the rest just
-            # append the batch rows as a delta — O(batch) bytes written.
+        if m.get("mode", "cow") == "mor":
             budget = int(m.get("compact_every", 8))
-            to_compact = [
+            rewrite = [
                 b for b in affected if len(deltas.get(str(b), [])) + 1 >= budget
             ]
-            delta_only = sorted(set(affected) - set(to_compact))
-            pieces = []
-            if to_compact:
-                cur = self.read(buckets=to_compact, manifest=m, internal=True)
-                sub = batch.filter(F.col("bucket").isin(to_compact)).drop("bucket")
-                pieces.append(
-                    merge_resolved(
-                        align_to_schema(cur, phys), sub, key_cols, order_cols,
-                        payload, salt_partitions,
-                    )
-                )
-            if delta_only:
-                # deltas store the batch REDUCED (one row per key): the
-                # batch may be raw events, and read-side amplification
-                # should be bounded by keys, not raw event volume
-                sub = align_to_schema(
-                    batch.filter(F.col("bucket").isin(delta_only)), phys
-                )
-                pieces.append(
-                    lww_resolve(
-                        sub, key_cols, order_cols, payload,
-                        salt_partitions=salt_partitions, validate=False,
-                    )
-                )
-            out = pieces[0]
-            for p in pieces[1:]:
-                out = out.unionByName(p)
-            out = out.withColumn("bucket", bucket_expr(key_cols, self.n_buckets))
-            counts = self._write_version_data(
-                out, version, len(affected), rel_dir=data_dir
-            )
-            for b in to_compact:
-                bs = str(b)
+        else:
+            rewrite = affected
+        # both sides read/aligned to the widened internal schema: the
+        # batch null-pads columns it lacks, the scan null-pads columns
+        # older files lack
+        phys = internal_schema(new_schema, key_cols, order_cols)
+        rows = align_to_schema(resolved, phys)
+        if rewrite:
+            rows = rows.unionByName(self._scan(m, rewrite, schema=phys)[0])
+        counts = self._write_version_data(
+            self._merge(rows, m, m["n_buckets"], len(affected), salt_partitions),
+            m, data_dir, len(affected),
+        )
+        for b in affected:
+            bs = str(b)
+            if b in rewrite:  # new base (or the bucket folded to nothing)
                 deltas.pop(bs, None)
                 delta_counts.pop(bs, None)
                 if b in counts:
@@ -1294,31 +1328,9 @@ class ParquetLakeTable:
                 else:
                     buckets.pop(bs, None)
                     bucket_counts.pop(bs, None)
-            for b in delta_only:
-                if b in counts:
-                    bs = str(b)
-                    deltas.setdefault(bs, []).append(data_dir)
-                    delta_counts[bs] = delta_counts.get(bs, 0) + counts[b]
-        else:
-            current = self.read(buckets=affected, manifest=m, internal=True)
-            merged = merge_resolved(
-                align_to_schema(current, phys),
-                batch.drop("bucket"),
-                key_cols,
-                order_cols,
-                payload,
-                salt_partitions,
-            ).withColumn("bucket", bucket_expr(key_cols, self.n_buckets))
-            counts = self._write_version_data(
-                merged, version, len(affected), rel_dir=data_dir
-            )
-            for b in affected:
-                if b in counts:
-                    buckets[str(b)] = data_dir
-                    bucket_counts[str(b)] = counts[b]
-                else:  # bucket fully deleted by this batch
-                    buckets.pop(str(b), None)
-                    bucket_counts.pop(str(b), None)
+            elif b in counts:  # mor: the reduced batch is a new delta
+                deltas.setdefault(bs, []).append(data_dir)
+                delta_counts[bs] = delta_counts.get(bs, 0) + counts[b]
 
         self._write_manifest(
             {

@@ -13,15 +13,19 @@ scan) plus a residual row filter at the boundary.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
+from go_cdc_spark.evolve import union_schema
 from go_cdc_spark.operators.resolve import apply_filters, from_token
 
 _SEG_RE = re.compile(r"^segment=(\d+)$")
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def list_segments(log_dir: str) -> list[int]:
@@ -51,6 +55,33 @@ def plan_chunks(segments: list[int], chunk_segments: int = 1) -> list[Chunk]:
     return chunks
 
 
+def _footer_schema(paths: list[str]) -> T.StructType | None:
+    """Merged schema of the parquet files in ``paths`` (segment dirs),
+    read from their footers on the driver — no Spark job. A file's
+    schema is the Spark row schema its writer stored in the footer
+    when present, else its Arrow schema; files merge with
+    ``evolve.union_schema`` (additive, numeric widening). Hidden and
+    ``_``-prefixed files are skipped, as Spark's reader skips them.
+    None if no file was found."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    merged = None
+    for p in paths:
+        for name in sorted(os.listdir(p)):
+            f = os.path.join(p, name)
+            if name.startswith(("_", ".")) or not os.path.isfile(f):
+                continue
+            arrow = pq.read_schema(f)
+            row = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+            s = (
+                T.StructType.fromJson(json.loads(row)) if row
+                else from_arrow_schema(arrow)
+            )
+            merged = s if merged is None else union_schema(merged, s)
+    return merged
+
+
 def read_chunk(
     spark: SparkSession,
     log_dir: str,
@@ -60,8 +91,10 @@ def read_chunk(
     fmt: str = "parquet",
     schema=None,
 ) -> DataFrame:
-    """Read one chunk with its own on-disk schema (segments may have
-    evolved columns; mergeSchema unifies within the chunk).
+    """Read one chunk with its own on-disk schema: segments may have
+    evolved columns, so the chunk is read with the merged schema of its
+    segment footers (``_footer_schema``, driver-side — the equivalent of
+    ``mergeSchema`` without its schema-inference job).
 
     ``fmt="json"`` reads JSON-lines segments — the shape a MongoDB
     change-stream export / Debezium-style feed lands in. JSON is not
@@ -74,7 +107,9 @@ def read_chunk(
     """
     paths = [os.path.join(log_dir, f"segment={k}") for k in chunk.segments]
     if fmt == "parquet":
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        merged = _footer_schema(paths)
+        reader = spark.read if merged is None else spark.read.schema(merged)
+        df = reader.parquet(*paths)
     elif fmt == "json":
         if schema is None:
             raise ValueError(

@@ -61,11 +61,15 @@ def apply_epoch(
 
     One wide shuffle per epoch: the batch goes to the sink RAW — the
     sink's merge is union(current, batch) → LWW reduce, and max-struct
-    associativity makes pre-reducing the batch redundant (it was a
-    second full shuffle of the same data). The lineage pass (affected
-    buckets, epoch HWM, per-bucket raw-event counts) is a map-side
-    partial aggregate over ≤ n_buckets groups — a driver round-trip of
-    ≤ n_buckets rows, no wide shuffle, no persist."""
+    associativity makes pre-reducing the batch redundant (it would be a
+    second full shuffle of the same data). The merge+write job plans
+    ONE exchange, hash by bucket, which the LWW reduce and the
+    bucket-partitioned write share (two tiers when ``salt_partitions``
+    is set). The lineage pass (affected buckets, epoch HWM, per-bucket
+    raw-event counts) is a separate job: a map-side partial aggregate
+    over ≤ n_buckets groups whose small exchange carries ≤ n_buckets
+    rows per input partition — a driver round-trip of ≤ n_buckets rows,
+    no persist."""
     from go_cdc_spark.operators.resolve import checked_op
     from go_cdc_spark.sinks.lake import bucket_expr
 
@@ -153,8 +157,8 @@ def replay_chunked(
 def _source_schema(cfg: PipelineConfig, lake: ParquetLakeTable):
     """Fixed read schema for non-self-describing formats (json): the
     configured schema, else EVENT_SCHEMA widened by the table's evolved
-    payload (absent columns parse as null). Parquet keeps None: its
-    footer schema + mergeSchema is strictly better. NOTE: a column that
+    payload (absent columns parse as null). Parquet keeps None: the
+    merged schema of its segment footers is strictly better. NOTE: a column that
     first appears MID-LOG must be declared via cfg.source_schema_json
     (≙ a schema-registry contract) — the fallback only knows columns
     the table has already seen, so an undeclared new JSON field is

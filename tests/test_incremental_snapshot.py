@@ -194,18 +194,28 @@ def test_rebucket_between_chunks_is_invisible(spark, tmpdir_path):
     m = lake.manifest()
     assert m["n_buckets"] == 16  # flip survived the remaining chunks
     assert table_fingerprint(lake.read().toPandas()) == _oracle_fp(spark, full_dir)
-    # post-flip chunk rows routed with the NEW modulus: every live row
-    # is in the bucket the 16-way hash assigns it (lookup depends on it)
+    # post-flip chunk rows routed with the NEW modulus: every stored row
+    # is in the bucket dir the 16-way hash assigns it (lookup depends on it)
+    from functools import reduce
+
     from go_cdc_spark.sinks.lake import bucket_expr
 
     some = lake.read().limit(5).collect()
     keys = [tuple(r[c] for c in cfg.key_cols) for r in some]
     got = {tuple(r[c] for c in cfg.key_cols) for r in lake.lookup(keys).collect()}
     assert got == set(keys)
-    internal = lake.read(internal=True).withColumn(
-        "_want", bucket_expr(cfg.key_cols, 16)
-    )
-    assert internal.filter(F.col("bucket") != F.col("_want")).count() == 0
+    pointers = list(m["buckets"].items()) + [
+        (b, d) for b, ds in m.get("deltas", {}).items() for d in ds
+    ]
+    stored = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            spark.read.parquet(os.path.join(cfg.table_root, d, f"bucket={b}"))
+            .select(*cfg.key_cols, F.lit(int(b)).alias("bucket"))
+            for b, d in pointers
+        ],
+    ).withColumn("_want", bucket_expr(cfg.key_cols, 16))
+    assert stored.filter(F.col("bucket") != F.col("_want")).count() == 0
 
 
 def test_rebucket_racing_chunk_commit_conflicts_then_resumes(spark, tmpdir_path):

@@ -123,3 +123,81 @@ def test_split_bad_records_good_side_pushdown(spark, tmpdir_path):
 
     good, _bad = split_bad_records(_log(spark, tmpdir_path))
     assert "op" in pushed_filters(good), pushed_filters(good)
+
+
+def _spy_write_plans(monkeypatch):
+    """Record the exchange count of every plan the lake writes."""
+    from go_cdc_spark.sinks.lake import ParquetLakeTable
+
+    seen = []
+    write = ParquetLakeTable._write_version_data
+
+    def spy(self, df, *args, **kwargs):
+        seen.append(shuffle_count(df.sortWithinPartitions("bucket")))
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(ParquetLakeTable, "_write_version_data", spy)
+    return seen
+
+
+def _epoch(spark, seed):
+    from go_cdc_spark.genlog import events_df
+
+    return events_df(
+        spark, LogSpec(n_events=400, n_repos=4, n_paths=20, n_commits=5, seed=seed)
+    )
+
+
+def test_epoch_write_plan_is_one_exchange(spark, tmpdir_path, monkeypatch):
+    """The unsalted MERGE hash-partitions batch ∪ current rows once by
+    bucket; the LWW reduce and the bucket-partitioned write reuse that
+    exchange: exactly 1 per copy-on-write epoch, merge-on-read delta
+    epoch, merge-on-read compaction epoch and ``compact()``."""
+    from go_cdc_spark.sinks.lake import ParquetLakeTable
+
+    seen = _spy_write_plans(monkeypatch)
+    cow = ParquetLakeTable.create(spark, f"{tmpdir_path}/cow", schemas.TABLE_SCHEMA, K, 4)
+    cow.apply_batch(_epoch(spark, 1), "e1")
+    cow.apply_batch(_epoch(spark, 2), "e2")  # merges current rows
+    assert seen == [1, 1], seen
+    mor = ParquetLakeTable.create(
+        spark, f"{tmpdir_path}/mor", schemas.TABLE_SCHEMA, K, 4, mode="mor",
+        compact_every=3,
+    )
+    for e in range(4):
+        mor.apply_batch(_epoch(spark, 10 + e), f"e{e}")
+    m = mor.manifest()
+    assert m["deltas"] and all(len(ds) == 1 for ds in m["deltas"].values())
+    assert mor.compact().applied
+    # 2 delta epochs, 1 compaction epoch, 1 delta epoch, compact()
+    assert seen[2:] == [1, 1, 1, 1, 1], seen
+
+
+def test_read_changed_since_lookup_plan_without_jobs(spark, tmpdir_path):
+    """Every tail-path read is planned from the manifest: building
+    read(), changed_since() and lookup() launches no Spark job (no
+    schema inference, no Python-worker job to hash lookup keys); only
+    the caller's action does."""
+    import uuid
+
+    from go_cdc_spark.sinks.lake import ParquetLakeTable
+
+    t = ParquetLakeTable.create(
+        spark, tmpdir_path, schemas.TABLE_SCHEMA, K, 4, mode="mor", compact_every=8
+    )
+    t.apply_batch(_epoch(spark, 1), "e1")
+    t.apply_batch(_epoch(spark, 2), "e2")  # a delta on top: reads fold
+    live = t.read().toPandas()
+    keys = [tuple(r) for r in live[K].head(3).itertuples(index=False)]
+    sc = spark.sparkContext
+    group = f"plan-only-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build reads without an action")
+    try:
+        dfs = [t.read(), t.changed_since((0, 0, -1)), t.lookup(keys)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    read, changed, looked = dfs
+    assert read.count() == len(live) and changed.count() >= len(live)
+    assert {tuple(r[c] for c in K) for r in looked.collect()} == set(keys)

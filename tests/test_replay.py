@@ -335,3 +335,74 @@ def test_locality_feed_replay_prunes_buckets_and_matches_oracle(spark, tmpdir_pa
     lake = ParquetLakeTable.load(spark, cfg.table_root)
     assert "content_sha" in lake.read().columns  # evolution under reorder
     assert _fingerprint(lake) == _oracle_fp(spark, cfg.source_log_path)
+
+
+def test_read_chunk_footer_schema_matches_merge_schema(spark, tmpdir_path):
+    """A chunk spanning the evolution point reads with the schema merged
+    from its segment footers on the driver: same schema and rows as
+    Spark's ``mergeSchema`` read, without the inference job. The last
+    segment is written by pyarrow, so its footer has no Spark row
+    schema and the Arrow schema is used."""
+    import pyarrow.parquet as pq
+
+    from go_cdc_spark.sources.oplog import Chunk, read_chunk
+
+    spec = LogSpec(
+        n_events=3_000, segment_events=1_000, files_per_segment=2,
+        evolve_from_segment=1, seed=13,
+    )
+    write_segments(spark, spec, tmpdir_path)
+    arrow_seg = os.path.join(tmpdir_path, "segment=3")
+    os.makedirs(arrow_seg)
+    seg2 = pq.read_table(os.path.join(tmpdir_path, "segment=2"))
+    pq.write_table(
+        seg2.replace_schema_metadata(None), os.path.join(arrow_seg, "part-0.parquet")
+    )
+    segs = [0, 1, 2, 3]
+    got = read_chunk(spark, tmpdir_path, Chunk(0, segs))
+    want = spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(tmpdir_path, f"segment={s}") for s in segs]
+    )
+    assert "content_sha" in got.columns
+    assert sorted(got.schema.fields, key=lambda f: f.name) == sorted(
+        want.schema.fields, key=lambda f: f.name
+    )
+    got = got.select(*want.columns)
+    assert got.count() == want.count() == 4_000
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def _full_scan_hwm(spark, log_dir):
+    """The source high-water mark by a scan of the whole log."""
+    from pyspark.sql import functions as F
+
+    m = (
+        spark.read.option("mergeSchema", "true").parquet(log_dir)
+        .agg(F.max(F.struct("ts_t", "ts_i", "seq")))
+        .collect()[0][0]
+    )
+    return (m["ts_t"], m["ts_i"], m["seq"]) if m else schemas.ZERO_TOKEN
+
+
+def test_replication_lag_reads_newest_segment_matches_full_scan(spark, tmpdir_path):
+    """The lag reads only the newest segment (numbering is monotone with
+    the order tuple), and answers what a full scan of the log answers —
+    on a multi-segment log with duplicates and on an empty log."""
+    bm = BookmarkStore(os.path.join(tmpdir_path, "bm"), "t1")
+    log_dir = os.path.join(tmpdir_path, "log")
+    write_segments(
+        spark, LogSpec(n_events=4_000, segment_events=1_000, dup_every=97, seed=3),
+        log_dir,
+    )
+    lag = replication_lag(spark, log_dir, bm)
+    assert lag["source_hwm"] == _full_scan_hwm(spark, log_dir)
+    assert not lag["caught_up"] and lag["lag_events"] > 0
+    # empty log: one segment holding no rows, and no segment at all
+    empty = os.path.join(tmpdir_path, "empty")
+    spark.createDataFrame([], schemas.EVENT_SCHEMA).write.parquet(
+        os.path.join(empty, "segment=0")
+    )
+    assert replication_lag(spark, empty, bm)["source_hwm"] == _full_scan_hwm(spark, empty)
+    for d in (empty, os.path.join(tmpdir_path, "missing")):
+        lag = replication_lag(spark, d, bm)
+        assert lag["source_hwm"] == schemas.ZERO_TOKEN and lag["caught_up"]

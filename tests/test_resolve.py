@@ -9,7 +9,6 @@ from pyspark.errors.exceptions.captured import SparkRuntimeException
 
 from go_cdc_spark import schemas
 from go_cdc_spark.genlog import LogSpec, events_df
-from go_cdc_spark.operators.merge import merge_resolved
 from go_cdc_spark.operators.resolve import apply_filters, from_token, lww_resolve
 from go_cdc_spark.oracle import replay_oracle
 
@@ -75,10 +74,30 @@ def test_lww_matches_pandas_oracle(spark):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_merge_resolved_applies_iud(spark):
-    current = spark.createDataFrame(
-        [("r1", "p1", "c1", "py", "old"), ("r2", "p1", "c1", "go", "keep")],
-        schema=schemas.TABLE_SCHEMA,
+def _table(spark, root, mode):
+    from go_cdc_spark.sinks.lake import ParquetLakeTable
+
+    return ParquetLakeTable.create(
+        spark, root, schemas.TABLE_SCHEMA, KEYS, 4, mode=mode, compact_every=2
+    )
+
+
+def test_merge_applies_iud(spark, tmpdir_path):
+    """≙ MERGE INTO: update replaces, delete removes, insert adds, and a
+    delete of an absent key is a no-op — through the sink's one merge,
+    over snapshot rows stamped order=-1 ("lose to any event"), in both
+    write modes."""
+    for mode in ("cow", "mor"):
+        _check_iud(spark, _table(spark, f"{tmpdir_path}/{mode}", mode))
+
+
+def _check_iud(spark, t):
+    t.overwrite(
+        spark.createDataFrame(
+            [("r1", "p1", "c1", "py", "old"), ("r2", "p1", "c1", "go", "keep")],
+            schema=schemas.TABLE_SCHEMA,
+        ),
+        "snap",
     )
     batch = _mk(
         spark,
@@ -89,34 +108,42 @@ def test_merge_resolved_applies_iud(spark):
             _row("d", 13, key=("r4", "p1", "c1")),  # delete absent = no-op
         ],
     )
-    resolved = lww_resolve(batch, KEYS, ORDER, PAYLOAD)
-    out = merge_resolved(current, resolved, KEYS, ORDER, PAYLOAD)
-    live = out.filter("op != 'd'")
-    got = {(r["repo"], r["content"]) for r in live.collect()}
+    t.apply_batch(lww_resolve(batch, KEYS, ORDER, PAYLOAD), "e1")
+    got = {(r["repo"], r["content"]) for r in t.read().collect()}
     assert got == {("r1", "new"), ("r3", "ins")}
     # deletes persist as tombstones carrying their order tuple
+    out = t.read(internal=True)
     tomb = {(r["repo"], r["seq"]) for r in out.filter("op = 'd'").collect()}
     assert tomb == {("r2", 11), ("r4", 13)}
 
 
-def test_merge_is_order_aware(spark):
+def test_merge_is_order_aware(spark, tmpdir_path):
     """An OLDER event arriving in a later batch must lose to the stored
-    row — micro-batches may split a poll window out of order."""
-    current = spark.createDataFrame(
-        [("r1", "p1", "c1", 1_700_000_099, 50, 50, "u", "py", "newer")],
-        schema="repo string, path string, commit string, ts_t long, ts_i long, seq long, op string, lang string, content string",
+    row — micro-batches may split a poll window out of order. Under
+    merge-on-read the second epoch of a bucket compacts
+    (compact_every=2), so the compaction merge is covered too."""
+    for mode in ("cow", "mor"):
+        _check_order_aware(spark, f"{tmpdir_path}/{mode}", mode)
+
+
+def _check_order_aware(spark, root, mode):
+    newer = (1_700_000_099, 50, 50)
+    stale = _mk(spark, [_row("u", 10, key=("r1", "p1", "c1"), content="stale")])
+    t = _table(spark, f"{root}/u", mode)
+    t.apply_batch(
+        _mk(spark, [("u", *newer, "r1", "p1", "c1", "py", "newer")]), "e1"
     )
-    batch = _mk(spark, [_row("u", 10, key=("r1", "p1", "c1"), content="stale")])
-    out = merge_resolved(current, lww_resolve(batch, KEYS, ORDER, PAYLOAD), KEYS, ORDER, PAYLOAD)
-    rows = out.collect()
+    t.apply_batch(stale, "e2")
+    rows = t.read().collect()
     assert len(rows) == 1 and rows[0]["content"] == "newer"
     # and a delete tombstone shields against resurrection by older events
-    cur2 = spark.createDataFrame(
-        [("r1", "p1", "c1", 1_700_000_099, 50, 50, "d", None, None)],
-        schema="repo string, path string, commit string, ts_t long, ts_i long, seq long, op string, lang string, content string",
+    t2 = _table(spark, f"{root}/d", mode)
+    t2.apply_batch(
+        _mk(spark, [("d", *newer, "r1", "p1", "c1", None, None)]), "e1"
     )
-    out2 = merge_resolved(cur2, lww_resolve(batch, KEYS, ORDER, PAYLOAD), KEYS, ORDER, PAYLOAD)
-    assert out2.filter("op != 'd'").count() == 0
+    t2.apply_batch(stale, "e2")
+    assert t2.read().count() == 0
+    assert [r["op"] for r in t2.read(internal=True).collect()] == ["d"]
 
 
 def test_filters_and_token(spark):
