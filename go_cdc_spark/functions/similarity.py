@@ -344,110 +344,43 @@ def near_dup_by_cosine(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_broadcast_rows: int = 500_000,
-    n_shards: int = 32,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (sim ≥ threshold) — exact,
-    with a doc-count regime switch so the driver never OOMs:
+    on the sharded block-pair kernel :func:`_block_pairs`: the driver
+    holds nothing, and the O(N²) compare spreads over S·(S+1)/2 tasks.
+    Use :func:`near_dup_by_cosine_lsh` / :func:`ivf_ann_topk` when
+    approximate answers are acceptable and N² itself is the problem.
 
-    - ≤ ``max_broadcast_rows``: collect + broadcast the corpus matrix
-      once (N×d float64; 500k × 64 dims = 256 MB, the ceiling this
-      default is sized to) and score each Arrow batch against it with
-      one numpy GEMM. This replaced a per-pair Column-expression
-      crossJoin that was ~15× slower.
-    - above it: :func:`_near_dup_cosine_blocked` — sharded block-pair
-      GEMM (same scheme as dense Jaccard); the driver holds nothing,
-      shuffle is N·(n_shards+1) vector rows, and the O(N²) compare
-      spreads over n_shards·(n_shards+1)/2 tasks. Still exact — use
-      :func:`lsh_ann_topk` / :func:`ivf_ann_topk` when approximate
-      top-k is acceptable and N² itself is the problem.
-
-    The regime gate is a ``limit(max_broadcast_rows + 1)`` probe, not a
-    full count — it stops scanning as soon as the threshold row exists,
-    so a cheap gate precedes an expensive op instead of doubling it.
-    In the blocked regime the exact count IS taken (trivial next to the
-    O(N²) compare it sizes) and ``n_shards`` scales with it so each
-    block stays ~``target_block_rows`` rows: worker memory per task is
-    then O(target_block² · 8 B) regardless of corpus size — a fixed 32
-    shards would OOM executors near 1M docs (per-group sims matrix
-    (N/32)² · 8 B ≈ 7.8 GB).
+    FP recipe (shared with the DuckDB oracle): un-normalised float64
+    GEMM, divide by the floored L2 norms, threshold the UNROUNDED value,
+    round only the survivors to 6 places.
     """
-    if df.select(id_col).limit(max_broadcast_rows + 1).count() > max_broadcast_rows:
-        n_docs = df.select(id_col).count()
-        shards = _scaled_shards(n_docs, n_shards)
-        return _near_dup_cosine_blocked(df, threshold, id_col, vec_col, shards)
-    pdf = df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    if len(ids) == 0:
-        return df.sparkSession.createDataFrame(
-            [], "doc_a long, doc_b long, cos_sim double"
-        )
-    mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-    norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-12)
-    bc = df.sparkSession.sparkContext.broadcast((ids, mat, norms))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_a", T.LongType()),
-            T.StructField("doc_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
+    def prep(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        m = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
+        return m, np.maximum(np.linalg.norm(m, axis=1), 1e-12)
 
-    def compute(it):
-        c_ids, c_mat, c_norms = bc.value
-        # Per-partition scratch reused across Arrow batches: the naive
-        # expression allocates three fresh rows×N float64 temporaries
-        # (GEMM out, norm outer product, quotient) plus a bool mask PER
-        # BATCH — fresh-page allocation is the slowest path on a busy
-        # host, and for exact all-pairs it dominates the kernel. The
-        # in-place ops below keep the float64 op order identical
-        # (matmul, outer multiply, divide) so pair sets and rounded
-        # values stay bit-equal to the blocked path and the SQL oracle.
-        scratch: dict[str, np.ndarray] = {}
+    def score(a, b):
+        sims = (a[0] @ b[0].T) / (a[1][:, None] * b[1][None, :])
+        ia, ib = np.nonzero(sims >= threshold)
+        return ia, ib, np.round(sims[ia, ib], 6)
 
-        def _buf(name: str, rows: int, cols: int, dtype) -> np.ndarray:
-            b = scratch.get(name)
-            if b is None or b.shape[0] < rows or b.shape[1] != cols:
-                b = np.empty((max(rows, b.shape[0] if b is not None else 0), cols),
-                             dtype=dtype)
-                scratch[name] = b
-            return b[:rows]
-
-        for block in it:
-            a_ids = block[id_col].to_numpy()
-            m = np.vstack(block[vec_col].to_numpy()).astype(np.float64)
-            n = np.maximum(np.linalg.norm(m, axis=1), 1e-12)
-            rows, nc = len(a_ids), c_mat.shape[0]
-            sims = _buf("sims", rows, nc, np.float64)
-            np.matmul(m, c_mat.T, out=sims)
-            den = _buf("den", rows, nc, np.float64)
-            np.multiply(n[:, None], c_norms[None, :], out=den)
-            np.divide(sims, den, out=sims)
-            mask = _buf("mask", rows, nc, np.bool_)
-            np.greater_equal(sims, threshold, out=mask)
-            ia, ib = np.nonzero(mask)
-            keep = a_ids[ia] < c_ids[ib]
-            yield pd.DataFrame(
-                {
-                    "doc_a": a_ids[ia][keep],
-                    "doc_b": c_ids[ib][keep],
-                    "cos_sim": np.round(sims[ia, ib][keep], 6),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(compute, schema=out_schema)
+    rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    return _block_pairs(rows, "cos_sim", prep, score)
 
 
 def _scaled_shards(
-    n_docs: int, n_shards_min: int, target_block_rows: int = 25_000
+    n_docs: int, parallelism: int, target_block_rows: int = 25_000
 ) -> int:
-    """Shard count for the block-nested-loop paths: at least the
-    configured floor, and enough that each shard holds ~``target_block_
-    rows`` docs — bounding per-task GEMM temporaries to
-    O(target_block² · 8 B) (~5 GB sims matrix at 25k, further row-
-    chunked inside the verifier) no matter how large the corpus is."""
-    return max(n_shards_min, -(-n_docs // target_block_rows))
+    """Shard count S for :func:`_block_pairs`: the smallest S whose
+    S·(S+1)/2 shard-pair tasks cover ``parallelism`` slots, raised so
+    each shard holds at most ~``target_block_rows`` docs — bounding the
+    per-task GEMM inputs (the verifier row-chunks the temporaries) no
+    matter how large the corpus is."""
+    s = max(1, -(-n_docs // target_block_rows))
+    while s * (s + 1) // 2 < parallelism:
+        s += 1
+    return s
 
 
 # Left-side row-chunk for the per-group GEMMs: bounds the largest
@@ -456,91 +389,70 @@ def _scaled_shards(
 _GEMM_ROW_CHUNK = 4096
 
 
-def _near_dup_cosine_blocked(
-    df: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    n_shards: int = 32,
-) -> DataFrame:
-    """Exact cosine near-dup pairs, fully distributed (no driver state).
+def _block_pairs(rows: DataFrame, value_col: str, prep, score) -> DataFrame:
+    """Exact all-pairs kernel shared by the exact near-dup operators:
+    (doc_a < doc_b, ``value_col``) for every pair ``score`` keeps.
 
-    Block-nested-loop over hash shards, the same scheme as
-    ``dedup._jaccard_dense_blocked``: vectors shard by id hash; shard u
-    fans out as side A to groups (u, t≥u) and side B to (s≤u, u) via a
-    JVM-side ``sequence``+``explode``, so each unordered vector pair
-    lands in exactly one group; the per-group verifier runs one float64
-    GEMM over L2-normalised rows. Shuffle = N·(n_shards+1) vector rows;
-    the inherent O(N²) compare work spreads over
-    n_shards·(n_shards+1)/2 tasks and scales out with executors.
+    ``rows`` has an ``id`` column plus the payload ``prep`` reads. One
+    count sizes S (:func:`_scaled_shards`); rows hash into S shards and
+    every unordered shard pair (s ≤ t) is one task group. A JVM-side
+    ``sequence``+``explode`` fans each row of shard u out S times: as
+    side A (role 0) to groups (u, t≥u) and as side B (role 1) to groups
+    (s<u, u), so each unordered row pair lands in exactly one group and
+    the plan has one exchange (hash by group). Per group,
+    ``prep(pdf) -> tuple of row-aligned arrays`` runs once per side and
+    ``score(a_chunk, b) -> (ia, ib, values)`` runs per left row chunk;
+    this helper maps positions to ids, keeps one order of each
+    diagonal-group pair and canonicalises the rest.
     """
-    s_lit = F.lit(n_shards)
-    base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).withColumn("shard", F.pmod(F.xxhash64("id"), s_lit).cast("int"))
-    a_side = base.select(
-        "id", "v", F.lit(0).alias("role"),
-        F.explode(
-            F.sequence(F.col("shard") * s_lit + F.col("shard"),
-                       F.col("shard") * s_lit + s_lit - 1)
-        ).alias("pair"),
+    S = _scaled_shards(rows.count(), rows.sparkSession.sparkContext.defaultParallelism)
+    u, k = F.col("_u"), F.col("_k")
+    fanned = (
+        rows.withColumn("_u", F.pmod(F.xxhash64("id"), F.lit(S)))
+        .withColumn("_k", F.explode(F.sequence(F.lit(0), F.lit(S - 1))))
+        .withColumn("role", (k >= S - u).cast("int"))
+        .withColumn(
+            "pair", F.when(k < S - u, u * S + u + k).otherwise((k - S + u) * S + u)
+        )
+        .drop("_u", "_k")
     )
-    b_side = base.select(
-        "id", "v", F.lit(1).alias("role"),
-        F.explode(
-            F.sequence(F.col("shard"), F.col("shard") * s_lit + F.col("shard"), s_lit)
-        ).alias("pair"),
-    )
-    both = a_side.unionByName(b_side)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_a", T.LongType()),
-            T.StructField("doc_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    empty = pd.DataFrame(
+        {
+            "doc_a": np.array([], dtype=np.int64),
+            "doc_b": np.array([], dtype=np.int64),
+            value_col: np.array([], dtype=np.float64),
+        }
     )
 
-    def cross_score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    def verify(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pair = int(key[0])
-        diagonal = (pair // n_shards) == (pair % n_shards)
-        left = pdf[pdf["role"] == 0]
-        right = left if diagonal else pdf[pdf["role"] == 1]
+        diagonal = pair // S == pair % S
+        if diagonal:  # one shard scored against itself: side A only
+            left = right = pdf
+        else:
+            left, right = pdf[pdf["role"] == 0], pdf[pdf["role"] == 1]
         if left.empty or right.empty:
-            return pd.DataFrame(
-                {
-                    "doc_a": np.array([], dtype=np.int64),
-                    "doc_b": np.array([], dtype=np.int64),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
-        # FP parity with the broadcast path (and the DuckDB oracle):
-        # un-normalized GEMM then divide-by-norms, threshold the
-        # UNROUNDED value, round only the survivors — identical
-        # operation order ⇒ identical pair sets at regime boundaries.
-        la = np.vstack(left["v"].to_numpy()).astype(np.float64)
-        na = np.maximum(np.linalg.norm(la, axis=1), 1e-12)
-        rb = np.vstack(right["v"].to_numpy()).astype(np.float64)
-        nb = np.maximum(np.linalg.norm(rb, axis=1), 1e-12)
-        l_ids = left["id"].to_numpy()
-        r_ids = right["id"].to_numpy()
+            return empty
+        la, rb = prep(left), prep(right)
+        l_ids, r_ids = left["id"].to_numpy(), right["id"].to_numpy()
         outs = []
-        for lo in range(0, len(la), _GEMM_ROW_CHUNK):
-            hi = lo + _GEMM_ROW_CHUNK
-            sims = (la[lo:hi] @ rb.T) / (na[lo:hi, None] * nb[None, :])
-            ia, ib = np.nonzero(sims >= threshold)
-            a_ids = l_ids[lo:hi][ia]
-            b_ids = r_ids[ib]
-            vals = np.round(sims[ia, ib], 6)
+        for lo in range(0, len(l_ids), _GEMM_ROW_CHUNK):
+            ia, ib, vals = score(tuple(x[lo:lo + _GEMM_ROW_CHUNK] for x in la), rb)
+            a_ids, b_ids = l_ids[lo + ia], r_ids[ib]
             if diagonal:
+                # every pair appears as (i, j) and (j, i), plus self-pairs
                 keep = a_ids < b_ids
                 a_ids, b_ids, vals = a_ids[keep], b_ids[keep], vals[keep]
             else:
+                # disjoint shards: each pair appears once, in arbitrary id
+                # order — canonicalise, never filter
                 a_ids, b_ids = np.minimum(a_ids, b_ids), np.maximum(a_ids, b_ids)
-            outs.append(pd.DataFrame({"doc_a": a_ids, "doc_b": b_ids, "cos_sim": vals}))
+            outs.append(pd.DataFrame({"doc_a": a_ids, "doc_b": b_ids, value_col: vals}))
         return pd.concat(outs, ignore_index=True)
 
-    return both.groupBy("pair").applyInPandas(cross_score, schema=out_schema)
+    return fanned.groupBy("pair").applyInPandas(
+        verify, schema=f"doc_a long, doc_b long, {value_col} double"
+    )
 
 
 def lsh_auto_bits(n_docs: int, target_bucket_rows: int = 2, max_bits: int = 24) -> int:
@@ -687,10 +599,10 @@ def near_dup_by_cosine_lsh(
       fixed bits. Costs one ``count()``.
     - Candidate generation is SKINNY (id, table, bucket) rows only —
       the vectors cross the Arrow boundary once for signatures and
-      never ride the bucket shuffle. Verification is regime-gated like
-      the exact operator: ≤ ``max_broadcast_rows`` broadcasts the
-      corpus matrix once and scores candidate batches with vectorized
-      gathers (no corpus re-join at all); above it, two skinny
+      never ride the bucket shuffle. Verification is gated on corpus
+      size: ≤ ``max_broadcast_rows`` broadcasts the corpus matrix
+      once and scores candidate batches with vectorized gathers (no
+      corpus re-join at all); above it, two skinny
       key-joins fetch vectors for the deduped candidates and a
       codegen'd expanded-dot cosine scores them. ``dropDuplicates``
       runs on SURVIVORS (broadcast regime) or on the skinny pair set
@@ -755,12 +667,12 @@ def near_dup_by_cosine_lsh(
             F.least("_a", "_b").alias("doc_a"), F.greatest("_a", "_b").alias("doc_b")
         )
     )
-    # exact verify, regime-gated like near_dup_by_cosine:
+    # exact verify, gated on corpus size:
     if n_docs <= max_broadcast_rows:
         # broadcast the corpus matrix once; candidates stream through
         # as Arrow batches of id pairs and one vectorized gather+dot
-        # scores each batch — same FP recipe as the exact broadcast
-        # path (unnormalized dot, divide by norms, threshold unrounded)
+        # scores each batch — same FP recipe as near_dup_by_cosine
+        # (unnormalized dot, divide by norms, threshold unrounded)
         out_schema = T.StructType(
             [
                 T.StructField("doc_a", T.LongType()),

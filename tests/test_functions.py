@@ -177,18 +177,53 @@ def test_winnow_shared_substring_guarantee(spark):
     assert a == b
 
 
-def test_jaccard_dense_and_prefix_paths_agree(spark):
-    docs = spark.read.parquet(DOCS).limit(300)
-    dense = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(docs, threshold=0.7).collect()
+def _forbid_driver_collect(monkeypatch):
+    """Make collecting the corpus to the driver, or broadcasting
+    anything, raise."""
+    from pyspark import SparkContext
+    from pyspark.sql import DataFrame
+
+    def boom(*a, **k):
+        raise AssertionError("exact near-dup operators must not collect or broadcast")
+
+    monkeypatch.setattr(DataFrame, "toPandas", boom)
+    monkeypatch.setattr(SparkContext, "broadcast", boom)
+
+
+def _shard_kinds(spark, df, id_col, pairs):
+    """Which group kinds scored the pairs: True for a diagonal group
+    (both ids in one shard), False for an off-diagonal one."""
+    from go_cdc_spark.functions.similarity import _scaled_shards
+
+    n_shards = _scaled_shards(df.count(), spark.sparkContext.defaultParallelism)
+    shard = {
+        r[0]: r[1]
+        for r in df.select(
+            id_col, F.pmod(F.xxhash64(id_col), F.lit(n_shards))
+        ).collect()
     }
+    return n_shards, {shard[a] == shard[b] for a, b in pairs}
+
+
+def test_jaccard_dense_and_prefix_paths_agree(spark, monkeypatch):
+    """The dense-vocabulary GEMM runs on the sharded block-pair kernel:
+    it equals the prefix-filter path, with ``DataFrame.toPandas`` and
+    ``SparkContext.broadcast`` made to raise (the vocabulary collect —
+    O(|vocab|) — and one count are its only driver state). At the
+    session's local[4] it runs ≥ 3 shards, and both diagonal and
+    off-diagonal groups contribute pairs."""
+    docs = spark.read.parquet(DOCS).limit(300)
     # dense_vocab_max=0 forces the AllPairs prefix-filter path
     prefix = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in jaccard_pairs(docs, threshold=0.7, dense_vocab_max=0).collect()
     }
-    assert dense == prefix and len(dense) > 0
+    n_shards, kinds = _shard_kinds(spark, docs, "doc_id", prefix)
+    assert n_shards >= 3 and kinds == {True, False}
+    _forbid_driver_collect(monkeypatch)
+    rows = jaccard_pairs(docs, threshold=0.7).collect()
+    dense = {(r.doc_a, r.doc_b): r.jaccard for r in rows}
+    assert dense == prefix and len(rows) == len(dense) > 0
 
 
 def test_kmeans_centroids_deterministic_and_normalized(spark):
@@ -389,55 +424,67 @@ def test_simhash_matches_bit_vote_oracle(spark):
     assert got == expect
 
 
-def test_jaccard_blocked_path_parity_no_driver_matrix(spark, monkeypatch):
-    """Above the doc-count gate, dense Jaccard must run the sharded
-    block-pair path: identical results AND no driver toPandas of the
-    corpus (vocab collect — O(|vocab|) — is the only driver state)."""
-    from pyspark.sql import DataFrame
-
-    docs = spark.read.parquet(DOCS).limit(300)
-    expect = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(docs, threshold=0.7).collect()
-    }
-    assert expect
-
-    def boom(self, *a, **k):
-        raise AssertionError("blocked path must not toPandas the corpus")
-
-    monkeypatch.setattr(DataFrame, "toPandas", boom)
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(
-            docs, threshold=0.7, dense_driver_max_docs=0, dense_shards=4
-        ).collect()
-    }
-    assert got == expect
-
-
-def test_cosine_blocked_path_parity_no_driver_collect(spark, monkeypatch):
-    """Above max_broadcast_rows, near_dup_by_cosine must run the fully
-    distributed block-pair path: identical pairs, no driver toPandas."""
-    from pyspark.sql import DataFrame
-
+def test_near_dup_cosine_matches_numpy_without_driver_state(spark, monkeypatch):
+    """near_dup_by_cosine runs on the sharded block-pair kernel: it
+    equals a NumPy all-pairs reference with the same op order
+    (un-normalised float64 GEMM, divide by the floored norms, threshold,
+    then round), with ``DataFrame.toPandas`` and
+    ``SparkContext.broadcast`` made to raise. At the session's local[4]
+    it runs ≥ 3 shards, and both group kinds contribute pairs."""
     emb = spark.read.parquet(EMB)
-    expect = {
-        (r.doc_a, r.doc_b): r.cos_sim
-        for r in near_dup_by_cosine(emb, threshold=0.45).collect()
-    }
+    pdf = emb.toPandas()
+    mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+    norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-12)
+    sims = (mat @ mat.T) / (norms[:, None] * norms[None, :])
+    ids = pdf["vec_id"].to_numpy()
+    ia, ib = np.nonzero(sims >= 0.45)
+    keep = ids[ia] < ids[ib]
+    ia, ib = ia[keep], ib[keep]
+    expect = dict(zip(zip(ids[ia].tolist(), ids[ib].tolist()),
+                      np.round(sims[ia, ib], 6).tolist()))
     assert expect
+    n_shards, kinds = _shard_kinds(spark, emb, "vec_id", expect)
+    assert n_shards >= 3 and kinds == {True, False}
+    _forbid_driver_collect(monkeypatch)
+    rows = near_dup_by_cosine(emb, threshold=0.45).collect()
+    got = {(r.doc_a, r.doc_b): r.cos_sim for r in rows}
+    assert got == expect and len(rows) == len(got)
 
-    def boom(self, *a, **k):
-        raise AssertionError("blocked path must not toPandas the corpus")
 
-    monkeypatch.setattr(DataFrame, "toPandas", boom)
-    got = {
-        (r.doc_a, r.doc_b): r.cos_sim
-        for r in near_dup_by_cosine(
-            emb, threshold=0.45, max_broadcast_rows=0, n_shards=4
-        ).collect()
-    }
-    assert got == expect
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_exact_near_dup_ops_empty_and_single_row(spark, n_rows):
+    """No pair exists in a corpus of zero or one rows: both exact
+    operators return an empty frame with their declared schema."""
+    docs = spark.createDataFrame([(7, "a b c")][:n_rows], "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(7, [1.0, 0.0])][:n_rows], "vec_id long, embedding array<double>"
+    )
+    for out, value in (
+        (jaccard_pairs(docs, threshold=0.5), "jaccard"),
+        (near_dup_by_cosine(emb, threshold=0.5), "cos_sim"),
+    ):
+        assert out.schema.simpleString() == (
+            f"struct<doc_a:bigint,doc_b:bigint,{value}:double>"
+        )
+        assert out.collect() == []
+
+
+def test_scaled_shards_covers_parallelism_and_bounds_blocks():
+    """The derived shard count S: S·(S+1)/2 shard-pair tasks cover the
+    parallelism, no shard holds more than 25,000 docs, S never shrinks
+    as the corpus grows, and S is the smallest count doing both."""
+    from go_cdc_spark.functions.similarity import _scaled_shards
+
+    for par in (1, 2, 3, 4, 8, 16, 64, 200):
+        prev = 0
+        for n in (0, 1, 500, 5_000, 24_999, 25_000, 25_001, 10**6, 10**8):
+            s = _scaled_shards(n, par)
+            assert s * (s + 1) // 2 >= par
+            assert -(-n // s) <= 25_000
+            assert s >= prev
+            assert s == 1 or (s - 1) * s // 2 < par or -(-n // (s - 1)) > 25_000
+            prev = s
+    assert _scaled_shards(500, 4) == 3
 
 
 def _union_find_components(edges):

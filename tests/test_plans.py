@@ -201,3 +201,24 @@ def test_read_changed_since_lookup_plan_without_jobs(spark, tmpdir_path):
     read, changed, looked = dfs
     assert read.count() == len(live) and changed.count() >= len(live)
     assert {tuple(r[c] for c in K) for r in looked.collect()} == set(keys)
+
+
+def test_exact_near_dup_plans_one_exchange_no_broadcast(spark):
+    """Both exact near-dup operators plan as the sharded block-pair
+    kernel: no broadcast of the corpus, and exactly one exchange — the
+    hash by shard pair that groups the fanned-out rows."""
+    from go_cdc_spark.functions.dedup import jaccard_pairs
+    from go_cdc_spark.functions.similarity import near_dup_by_cosine
+    from go_cdc_spark.plans.inspect import formatted_plan
+
+    docs = spark.createDataFrame(
+        [(i, " ".join("abcd"[: 1 + i % 4])) for i in range(40)], "doc_id long, text string"
+    )
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0]) for i in range(40)], "vec_id long, embedding array<double>"
+    )
+    for out in (jaccard_pairs(docs, threshold=0.9), near_dup_by_cosine(emb, threshold=0.9)):
+        plan = formatted_plan(out)
+        assert "BroadcastExchange" not in plan, plan
+        assert shuffle_count(out) == 1, plan
+        assert "hashpartitioning(pair#" in plan, plan
