@@ -205,7 +205,21 @@ def _shard_kinds(spark, df, id_col, pairs):
     return n_shards, {shard[a] == shard[b] for a, b in pairs}
 
 
-def test_jaccard_dense_and_prefix_paths_agree(spark, monkeypatch):
+def test_jaccard_dense_and_prefix_paths_agree(spark):
+    docs = spark.read.parquet(DOCS).limit(300)
+    dense = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in jaccard_pairs(docs, threshold=0.7).collect()
+    }
+    # dense_vocab_max=0 forces the AllPairs prefix-filter path
+    prefix = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in jaccard_pairs(docs, threshold=0.7, dense_vocab_max=0).collect()
+    }
+    assert dense == prefix and len(dense) > 0
+
+
+def test_jaccard_blocked_path_parity_no_driver_matrix(spark, monkeypatch):
     """The dense-vocabulary GEMM runs on the sharded block-pair kernel:
     it equals the prefix-filter path, with ``DataFrame.toPandas`` and
     ``SparkContext.broadcast`` made to raise (the vocabulary collect —
@@ -213,7 +227,6 @@ def test_jaccard_dense_and_prefix_paths_agree(spark, monkeypatch):
     session's local[4] it runs ≥ 3 shards, and both diagonal and
     off-diagonal groups contribute pairs."""
     docs = spark.read.parquet(DOCS).limit(300)
-    # dense_vocab_max=0 forces the AllPairs prefix-filter path
     prefix = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in jaccard_pairs(docs, threshold=0.7, dense_vocab_max=0).collect()
