@@ -65,53 +65,28 @@ def build_spark(cpus: int, local_dir: str | None = None):
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .appName(f"go_cdc_scaling_{cpus}")
-    )
-    # Write-path / fairness knob set, individually A/B-able via
-    # SPARK_GRAFT_TUNE (comma-set of {split,buf,rawfs,gc}). Default is
-    # the A/B winner split,rawfs,gc — the 1 MB "buf" buffers measured
-    # as a 1.5x wall / 2x CPU REGRESSION at the wide level (each
-    # shuffle-file open zeroes a fresh 1 MB buffer, which IS the
-    # kernel page-alloc pressure they were meant to avoid) — see
-    # BENCH/BASELINE.md round-3 A/B table.
-    tune = set(
-        os.environ.get("SPARK_GRAFT_TUNE", "split,rawfs,gc").split(",")
-    )
-    if "split" in tune:
-        # Scan splits sized so one epoch's segment files fan out to >=
-        # the wide level's thread count. Default 128m bin-packs the
-        # ~30MB segment files into ~8 splits: the scan+shuffle-map
-        # stage then runs 8-wide at BOTH levels — invisible at
-        # local[4], a 50-75% idle stage at local[16/32].
-        b = b.config("spark.sql.files.maxPartitionBytes", "32m").config(
-            "spark.sql.files.openCostInBytes", "1m"
-        )
-    if "buf" in tune:
-        # Writer-path allocation pressure (round-2 probe: the host's
-        # kernel page-alloc path collapses under many concurrent small
-        # writers): larger, fewer I/O buffers per shuffle/spill file.
-        b = (
-            b.config("spark.shuffle.file.buffer", "1m")
-            .config("spark.shuffle.unsafe.file.output.buffer", "1m")
-            .config("spark.io.compression.lz4.blockSize", "512k")
-        )
-    if "rawfs" in tune:
-        # tmpfs needs no checksum protection: LocalFileSystem writes a
-        # .crc shadow file per data file (2x file creates + extra page
-        # churn per bucket write); RawLocalFileSystem skips them.
-        b = b.config(
-            "spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem"
-        )
-    if "gc" in tune:
-        # GC-thread fairness: JVM ergonomics size the GC pool off the
-        # VM's 32 advertised vCPUs at BOTH levels, so the local[4]
-        # worker silently offloads GC onto 20+ extra cores a real
-        # 4-core node would not have — inflating the narrow level's
-        # wall-clock and biasing measured efficiency DOWN. Cap GC
-        # threads at the level's core count, like a real N-core node.
-        b = b.config(
+        # Write-path / fairness settings: the round-3 A/B winner
+        # (split,rawfs,gc; BENCH/BASELINE.md). split: scan splits sized
+        # so one epoch's segment files fan out to >= the wide level's
+        # thread count — the default 128m bin-packs the ~30MB segment
+        # files into ~8 splits, so the scan+shuffle-map stage runs
+        # 8-wide at BOTH levels (a 50-75% idle stage at local[16/32]).
+        .config("spark.sql.files.maxPartitionBytes", "32m")
+        .config("spark.sql.files.openCostInBytes", "1m")
+        # rawfs: tmpfs needs no checksum protection; LocalFileSystem
+        # writes a .crc shadow file per data file (2x file creates +
+        # extra page churn per bucket write), RawLocalFileSystem skips them.
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        # gc: JVM ergonomics size the GC pool off the VM's 32 advertised
+        # vCPUs at BOTH levels, so the local[4] worker silently offloads
+        # GC onto 20+ extra cores a real 4-core node would not have —
+        # inflating the narrow level's wall-clock and biasing measured
+        # efficiency DOWN. Cap GC threads at the level's core count.
+        .config(
             "spark.driver.extraJavaOptions",
             f"-XX:ParallelGCThreads={cpus} -XX:ConcGCThreads={max(cpus // 4, 1)}",
         )
+    )
     if local_dir:
         # shuffle/spill on the same medium as the data: on a cluster every
         # executor has local shuffle disks; one shared virtio disk here

@@ -4,9 +4,6 @@
 reference mongoreplay/oplog.go:56-174, config/*.json) collapsed into one
 dataclass. Thresholds mirror the reference's tuning constants:
 
-- ``chunk_max_events`` ≙ FetchCountThreshold=1000 (tailer.go:35) — scaled
-  up because a Spark micro-batch is the buffer+poll combined; at cluster
-  scale one chunk should be many millions of events.
 - ``trigger_interval`` ≙ the 1 s poll/flush tickers (tailer.go:100,
   tailer_manager.go:97).
 """
@@ -31,9 +28,6 @@ class PipelineConfig:
     # few dozen; a 100 TB table wants O(10k) buckets so a micro-batch
     # touching 1% of keys rewrites only ~1% of the data.
     n_buckets: int = 32
-    # Max events per replay chunk in chunked-batch mode
-    # (≙ FetchCountThreshold, tailer.go:35).
-    chunk_max_events: int = 1_000_000
     # Streaming trigger (≙ 1 s tickers). None ⇒ Trigger.AvailableNow.
     trigger_interval: str | None = None
     # Salt partitions for the two-phase LWW reduce of skewed hot keys

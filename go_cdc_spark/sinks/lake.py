@@ -16,11 +16,15 @@ Layout::
       data/v{N}-c{uuid}/bucket={b}/*.parquet  -- compaction rewrites
       data/v{N}-r{uuid}/bucket={b}/*.parquet  -- rebucket rewrites
 
-Every writer gets a UNIQUE data dir per commit attempt, so optimistic
-writers racing to the same next version can never clobber each other's
-parquet files — the manifest CAS decides the winner and the loser's
-dir is an orphan vacuum() grace-ages away. Pointers in the manifest
-are dir-name agnostic.
+One commit path: every writer (``apply_batch``, ``compact``,
+``rebucket``, ``overwrite``) runs ``_write_version_data`` →
+``_commit`` → ``_write_manifest``. ``_write_version_data`` names a
+UNIQUE data dir per commit attempt, so optimistic writers racing to the
+same next version can never clobber each other's parquet files, and
+returns the dir with its row counts and footer stats (``VersionData``);
+``_commit`` alone turns a manifest into the next one; the manifest CAS
+decides the winner and the loser's dir is an orphan vacuum()
+grace-ages away. Pointers in the manifest are dir-name agnostic.
 
 Two write modes (``create(..., mode=)``): copy-on-write rewrites the
 buckets an epoch touches; merge-on-read appends the epoch's reduced
@@ -38,7 +42,7 @@ deltas — O(batch) bytes written per epoch, the ingest-throughput mode.
   the whole table" (SURVEY §7 risk b).
 - Exactly-once: every manifest records its ``epoch_key``;
   ``apply_batch`` is a no-op if the epoch is already committed, and
-  the manifest write is an atomic ``os.rename`` — re-running a failed
+  the manifest write is an atomic ``os.link`` — re-running a failed
   epoch either sees the old manifest (retry applies) or the new one
   (retry no-ops). ≙ upgrading the reference's at-least-once resume
   token (resume_token_store.go:33-58) to exactly-once.
@@ -94,6 +98,19 @@ class CommitStats:
     affected_buckets: list[int] = field(default_factory=list)
     bucket_counts: dict[int, int] = field(default_factory=dict)
     rows_written: int = 0
+
+
+@dataclass
+class VersionData:
+    """One ``_write_version_data`` result, handed to ``_commit``: the
+    unique data dir, its per-bucket row counts, and the data-skipping
+    stats read from its parquet footers (bucket → order0 [min, max];
+    bucket → file → column → [min, max], clustered writes only)."""
+
+    dir: str
+    counts: dict[int, int]
+    order_stats: dict[str, list]
+    file_stats: dict[str, dict[str, dict[str, list]]]
 
 
 def bucket_expr(key_cols: list[str], n_buckets: int):
@@ -288,34 +305,8 @@ class ParquetLakeTable:
             return json.load(fh)
 
     def _write_manifest(self, m: dict) -> None:
-        # Attach the data-skipping stats the preceding _write_version_data
-        # gathered (each commit path writes at most one version dir), then
-        # drop stats for dirs no surviving pointer references — the stats
-        # map stays O(live dirs), not O(history).
-        pending = getattr(self, "_pending_stats", None)
-        pending_fs = getattr(self, "_pending_file_stats", None)
-        pending_dir = getattr(self, "_pending_stats_dir", None)
-        # pending stats are consumed unconditionally (success OR
-        # conflict) so a later commit that writes no data can never
-        # attach a stale batch's stats; compact's conflict-rebase
-        # snapshots and restores them around each attempt.
-        self._pending_stats = None
-        self._pending_file_stats = None
-        self._pending_stats_dir = None
-        stats = {d: dict(s) for d, s in m.get("order_stats", {}).items()}
-        if pending:
-            stats[pending_dir] = pending
-        fstats = {d: dict(s) for d, s in m.get("file_stats", {}).items()}
-        if pending_fs:
-            fstats[pending_dir] = pending_fs
-        referenced = set(m.get("buckets", {}).values()) | {
-            d for ds in m.get("deltas", {}).values() for d in ds
-        }
-        m = {
-            **m,
-            "order_stats": {d: s for d, s in stats.items() if d in referenced},
-            "file_stats": {d: s for d, s in fstats.items() if d in referenced},
-        }
+        """Publish ``m`` as version ``m["version"]`` or raise on a commit
+        conflict. Called only by ``create`` and ``_commit``."""
         target = os.path.join(self._commits_dir, f"v{m['version']:012d}.json")
         fd, tmp = tempfile.mkstemp(dir=self._commits_dir, suffix=".tmp")
         with os.fdopen(fd, "w") as fh:
@@ -334,6 +325,81 @@ class ParquetLakeTable:
             ) from None
         finally:
             os.unlink(tmp)
+
+    def _commit(
+        self,
+        base: dict,
+        epoch_key: str,
+        written: VersionData | None = None,
+        rewrite=(),
+        affected: list[int] | None = None,
+        reset: bool = False,
+        **fields,
+    ) -> CommitStats:
+        """The one commit path: turn ``base`` into version
+        ``base["version"] + 1`` recording ``epoch_key``, and CAS it.
+
+        ``written`` is the commit's data dir (None for an empty epoch);
+        its stats travel with it into the manifest. For each bucket in
+        ``affected`` (default: every bucket ``written`` holds), a bucket
+        in ``rewrite`` — every bucket when ``reset`` — gets the dir as
+        its new base and loses its delta chain (or drops out of the
+        table when the dir holds none of its rows); any other bucket the
+        dir holds gets it appended as a delta. ``reset`` starts from an
+        empty layout (``rebucket``, ``overwrite``). ``fields`` replace
+        top-level manifest entries (``schema``, ``n_buckets``). Stats
+        are kept only for dirs a pointer still references, so the stats
+        maps stay O(live dirs), not O(history). Raises the conflict
+        error of ``_write_manifest`` if another writer took the
+        version; nothing is left on ``self``, so a retry from a reloaded
+        manifest is safe."""
+        version = base["version"] + 1
+        counts = written.counts if written else {}
+        affected = sorted(counts) if affected is None else affected
+        src = {} if reset else base
+        buckets = dict(src.get("buckets", {}))
+        bucket_counts = dict(src.get("bucket_counts", {}))
+        deltas = {b: list(ds) for b, ds in src.get("deltas", {}).items()}
+        delta_counts = dict(src.get("delta_counts", {}))
+        for b in affected:
+            bs = str(b)
+            if reset or b in rewrite:  # new base (or the bucket folded to nothing)
+                deltas.pop(bs, None)
+                delta_counts.pop(bs, None)
+                if b in counts:
+                    buckets[bs] = written.dir
+                    bucket_counts[bs] = counts[b]
+                else:
+                    buckets.pop(bs, None)
+                    bucket_counts.pop(bs, None)
+            elif b in counts:  # mor: the reduced batch is a new delta
+                deltas.setdefault(bs, []).append(written.dir)
+                delta_counts[bs] = delta_counts.get(bs, 0) + counts[b]
+        order_stats = dict(base.get("order_stats", {}))
+        file_stats = dict(base.get("file_stats", {}))
+        if written and written.order_stats:
+            order_stats[written.dir] = written.order_stats
+        if written and written.file_stats:
+            file_stats[written.dir] = written.file_stats
+        referenced = set(buckets.values()) | {d for ds in deltas.values() for d in ds}
+        self._write_manifest(
+            {
+                **base,
+                **fields,
+                "version": version,
+                "epoch_key": epoch_key,
+                "buckets": buckets,
+                "bucket_counts": bucket_counts,
+                "deltas": deltas,
+                "delta_counts": delta_counts,
+                **self._epochs_after_commit(base, epoch_key, version),
+                "order_stats": {d: s for d, s in order_stats.items() if d in referenced},
+                "file_stats": {d: s for d, s in file_stats.items() if d in referenced},
+            }
+        )
+        return CommitStats(
+            version, epoch_key, True, affected, counts, sum(counts.values())
+        )
 
     # ---------- properties ----------
 
@@ -377,7 +443,7 @@ class ParquetLakeTable:
         detection therefore covers the recent window (crash-retry
         duplicates are always recent); orchestration-level skips of
         arbitrarily old epochs go through :meth:`committed_epochs`.
-        The rollup file is written before the manifest rename (the
+        The rollup file is written before the manifest link (the
         commit point) — a crash in between leaves an orphan file that
         the retried commit overwrites."""
         epochs = m["epochs"] + [epoch_key]
@@ -647,16 +713,19 @@ class ParquetLakeTable:
         self,
         df: DataFrame,
         m: dict,
-        rel_dir: str,
+        kind: str,
         n_files_hint: int,
         cluster_by: list[str] | None = None,
         cluster_files: int = 8,
-    ) -> dict[int, int]:
+    ) -> VersionData:
         """Write ``_merge`` output (carries ``bucket``, partitioned by
-        it) under ``rel_dir`` — a unique dir per commit attempt, so a
-        concurrent writer racing to the same next version can never
-        overwrite its files; returns per-bucket row counts read back
-        from the written files.
+        it) under ``data/v{N}-{kind}{uuid}`` (N = ``m``'s next version;
+        kind ``i`` ingest, ``c`` compaction, ``r`` rebucket) — a unique
+        dir per commit attempt, so a concurrent writer racing to the
+        same next version can never overwrite its files. Returns the
+        dir with its per-bucket row counts and data-skipping stats, all
+        read back from the written files' parquet footers: the stats
+        travel with the write into ``_commit``.
 
         ``cluster_by`` (compaction only) range-clusters each bucket's
         rows into ~``cluster_files`` files by the given columns (ntile
@@ -665,10 +734,8 @@ class ParquetLakeTable:
         and ``read(prune_ranges=...)`` can skip whole files — the
         bucket layout (key hash) is untouched, only how a bucket's
         rows split into files changes, which MERGE never observes."""
+        rel_dir = f"data/v{m['version'] + 1}-{kind}{uuid.uuid4().hex[:8]}"
         out_dir = os.path.join(self.root, *rel_dir.split("/"))
-        # mode=overwrite: a data dir without a manifest is garbage from a
-        # crashed attempt — the retry must be able to reclaim it (the
-        # manifest rename, not the data write, is the commit point).
         # The explicit sortWithinPartitions is load-bearing: without a
         # visible sort on the partition column, planned write inserts
         # its own full re-sort before the dynamic-partition write
@@ -765,16 +832,8 @@ class ParquetLakeTable:
                     per_col[c] = [mn, mx]
             return b, os.path.basename(path), md.num_rows, per_col
 
-        counts: dict[int, int] = {}
-        bounds: dict[int, list] = {}  # bucket -> [min, max] of order0
-        fstats: dict[str, dict[str, dict[str, list]]] = {}
-        self._pending_stats = {}
-        self._pending_file_stats = {} if cluster_by else None
-        self._pending_stats_dir = rel_dir
-        if not os.path.isdir(out_dir):
-            return counts
         work = []  # (bucket, file path)
-        for name in os.listdir(out_dir):
+        for name in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
             if not name.startswith("bucket="):
                 continue
             b = int(name.split("=", 1)[1])
@@ -785,9 +844,12 @@ class ParquetLakeTable:
                 if f.endswith(".parquet")
             )
         if not work:
-            return counts
+            return VersionData(rel_dir, {}, {}, {})
         with ThreadPoolExecutor(max_workers=min(16, len(work))) as ex:
             rows = list(ex.map(footer, work))
+        counts: dict[int, int] = {}
+        bounds: dict[int, list] = {}  # bucket -> [min, max] of order0
+        fstats: dict[str, dict[str, dict[str, list]]] = {}
         no_stats = set()
         for b, fname, n, per_col in rows:
             if n:
@@ -807,12 +869,8 @@ class ParquetLakeTable:
                 fstats.setdefault(str(b), {})[fname] = {
                     c: v for c, v in per_col.items() if c in set(cluster_by)
                 }
-        self._pending_stats = {
-            str(b): v for b, v in bounds.items() if b not in no_stats
-        }
-        if cluster_by:
-            self._pending_file_stats = fstats
-        return counts
+        order_stats = {str(b): v for b, v in bounds.items() if b not in no_stats}
+        return VersionData(rel_dir, counts, order_stats, fstats)
 
     def vacuum(
         self, keep_manifests: int = 8, orphan_grace_sec: float = 3600.0
@@ -842,30 +900,28 @@ class ParquetLakeTable:
         import shutil
         import time as _time
 
+        def referenced_by(manifest_files: list[str]) -> set[tuple[str, str]]:
+            out: set[tuple[str, str]] = set()
+            for f in manifest_files:
+                with open(os.path.join(self._commits_dir, f)) as fh:
+                    m = json.load(fh)
+                out.update((d, b) for b, d in m["buckets"].items())
+                for b, ds in m.get("deltas", {}).items():
+                    out.update((d, b) for d in ds)
+            return out
+
         # referenced-by-anything snapshot BEFORE pruning: distinguishes
         # superseded history (reclaim now) from never-referenced orphans
         # (grace-aged) afterwards
         files = self._epoch_manifest_files()
-        referenced_any: set[tuple[str, str]] = set()
-        for f in files:
-            with open(os.path.join(self._commits_dir, f)) as fh:
-                m = json.load(fh)
-            referenced_any.update((d, b) for b, d in m["buckets"].items())
-            for b, ds in m.get("deltas", {}).items():
-                referenced_any.update((d, b) for d in ds)
+        referenced_any = referenced_by(files)
         # prune old manifests first: a crash mid-vacuum must never leave
         # a readable manifest pointing at deleted data
         for f in files[:-max(keep_manifests, 1)]:
             os.unlink(os.path.join(self._commits_dir, f))
         # referenced = union over ALL surviving manifests, so every
         # kept time-travel version stays readable after the vacuum
-        referenced: set[tuple[str, str]] = set()
-        for f in files[-max(keep_manifests, 1):]:
-            with open(os.path.join(self._commits_dir, f)) as fh:
-                m = json.load(fh)
-            referenced.update((d, b) for b, d in m["buckets"].items())
-            for b, ds in m.get("deltas", {}).items():
-                referenced.update((d, b) for d in ds)
+        referenced = referenced_by(files[-max(keep_manifests, 1):])
         now = _time.time()
         removed: list[str] = []
         # stale temp files in _commits: a writer crashing between
@@ -955,46 +1011,15 @@ class ParquetLakeTable:
         epoch_key = f"__compact__v{m['version']}b{bset}"
         if not target or epoch_key in m["epochs"]:
             return CommitStats(m["version"], epoch_key, applied=False)
-        version = m["version"] + 1
         # the unfolded base+delta rows, LWW-folded by the one merge
         # (tombstones kept)
         folded = self._merge(
             self._scan(m, target)[0], m, m["n_buckets"], len(target)
         )
-        # unique dir: an ingest writer racing to the same next version
-        # must never clobber the fold (a crashed attempt leaves an
-        # orphan uuid dir; vacuum reclaims it)
-        data_dir = f"data/v{version}-c{uuid.uuid4().hex[:8]}"
-        counts = self._write_version_data(
-            folded, m, data_dir, len(target), cluster_by=cluster_by,
+        written = self._write_version_data(
+            folded, m, "c", len(target), cluster_by=cluster_by,
             cluster_files=cluster_files,
         )
-        def _manifest_on(base: dict, v: int) -> dict:
-            bucket_ptrs = dict(base["buckets"])
-            bucket_counts = dict(base["bucket_counts"])
-            deltas = {b: list(ds) for b, ds in base.get("deltas", {}).items()}
-            delta_counts = dict(base.get("delta_counts", {}))
-            for b in target:
-                bs = str(b)
-                deltas.pop(bs, None)
-                delta_counts.pop(bs, None)
-                if b in counts:
-                    bucket_ptrs[bs] = data_dir
-                    bucket_counts[bs] = counts[b]
-                else:  # folded to nothing (shouldn't happen: tombstones kept)
-                    bucket_ptrs.pop(bs, None)
-                    bucket_counts.pop(bs, None)
-            return {
-                **base,
-                "version": v,
-                "epoch_key": epoch_key,
-                "buckets": bucket_ptrs,
-                "bucket_counts": bucket_counts,
-                "deltas": deltas,
-                "delta_counts": delta_counts,
-                **self._epochs_after_commit(base, epoch_key, v),
-            }
-
         # Optimistic commit with Iceberg-style validate-and-rebase:
         # ingest commits landing while the fold ran only conflict on the
         # VERSION NUMBER if they touched other buckets — validate that
@@ -1004,25 +1029,11 @@ class ParquetLakeTable:
         # elsewhere carry over from it). If an interleaved commit DID
         # touch a target bucket, the fold is stale: fail loudly, the
         # caller re-runs compact() against current state.
-        saved = (
-            getattr(self, "_pending_stats", None),
-            getattr(self, "_pending_file_stats", None),
-            getattr(self, "_pending_stats_dir", None),
-        )
-        base, v = m, version
+        base = m
         for _ in range(8):
             try:
-                # restore the fold's data-skipping stats for this
-                # attempt (_write_manifest consumes them even on
-                # conflict, and the rebase re-commits the same data)
-                (
-                    self._pending_stats,
-                    self._pending_file_stats,
-                    self._pending_stats_dir,
-                ) = saved
-                self._write_manifest(_manifest_on(base, v))
-                return CommitStats(
-                    v, epoch_key, True, target, counts, sum(counts.values())
+                return self._commit(
+                    base, epoch_key, written, rewrite=target, affected=target
                 )
             except RuntimeError as e:
                 if "commit conflict" not in str(e):
@@ -1048,7 +1059,7 @@ class ParquetLakeTable:
                             "concurrent commit; re-run compact() against "
                             "the current table state"
                         ) from None
-                base, v = latest, latest["version"] + 1
+                base = latest
         raise RuntimeError(
             "compaction could not commit after 8 rebase attempts "
             "(continuous concurrent commits); re-run compact()"
@@ -1132,31 +1143,12 @@ class ParquetLakeTable:
         epoch_key = f"__rebucket__{new_n_buckets}__v{m['version']}"
         if epoch_key in m["epochs"]:
             return CommitStats(m["version"], epoch_key, applied=False)
-        version = m["version"] + 1
         folded = self._merge(self._scan(m)[0], m, new_n_buckets, new_n_buckets)
-        # unique dir, like compact(): rebucket is a maintenance op that
-        # can race an ingest writer to the same next version — its data
-        # must be unclobberable. Unlike compact there is no rebase (a
-        # layout flip is invalidated by ANY concurrent commit): the
-        # manifest CAS fails loudly and the caller re-runs; the orphan
-        # dir is vacuumed.
-        data_dir = f"data/v{version}-r{uuid.uuid4().hex[:8]}"
-        counts = self._write_version_data(folded, m, data_dir, new_n_buckets)
-        self._write_manifest(
-            {
-                **m,
-                "version": version,
-                "epoch_key": epoch_key,
-                "n_buckets": new_n_buckets,
-                "buckets": {str(b): data_dir for b in counts},
-                "bucket_counts": {str(b): n for b, n in counts.items()},
-                "deltas": {},
-                "delta_counts": {},
-                **self._epochs_after_commit(m, epoch_key, version),
-            }
-        )
-        return CommitStats(
-            version, epoch_key, True, sorted(counts), counts, sum(counts.values())
+        # no rebase, unlike compact(): a layout flip is invalidated by ANY
+        # concurrent commit, so the CAS fails loudly and the caller re-runs
+        return self._commit(
+            m, epoch_key, self._write_version_data(folded, m, "r", new_n_buckets),
+            reset=True, n_buckets=new_n_buckets,
         )
 
     def _epoch_manifest_files(self) -> list[str]:
@@ -1187,7 +1179,6 @@ class ParquetLakeTable:
             T.StructType.fromJson(json.loads(m["schema"])),
             T.StructType([f for f in df.schema.fields if f.name not in internal]),
         )
-        version = m["version"] + 1
         # snapshot rows carry their creation stamp when the source has
         # one (≙ dumper.go:85 stamping the token from createdAt), else
         # order=-1: "older than any replayed event".
@@ -1198,33 +1189,11 @@ class ParquetLakeTable:
         for c in order_cols:
             if c not in df.columns:
                 data = data.withColumn(c, F.lit(-1).cast("long"))
-        # unique dir per attempt: two ingest writers racing to the same
-        # next version must never share a data dir — the CAS loser's
-        # mode('overwrite') would have already clobbered the winner's
-        # committed files before the manifest conflict raised. The
-        # loser's dir becomes an orphan vacuum grace-ages away, and a
-        # reload-and-retry after a commit conflict is safe.
-        data_dir = f"data/v{version}-i{uuid.uuid4().hex[:8]}"
-        counts = self._write_version_data(
+        written = self._write_version_data(
             self._merge(data, m, m["n_buckets"], m["n_buckets"]),
-            m, data_dir, m["n_buckets"],
+            m, "i", m["n_buckets"],
         )
-        self._write_manifest(
-            {
-                **m,
-                "version": version,
-                "epoch_key": epoch_key,
-                "schema": schema.json(),
-                "buckets": {str(b): data_dir for b in counts},
-                "bucket_counts": {str(b): n for b, n in counts.items()},
-                "deltas": {},
-                "delta_counts": {},
-                **self._epochs_after_commit(m, epoch_key, version),
-            }
-        )
-        return CommitStats(
-            version, epoch_key, True, sorted(counts), counts, sum(counts.values())
-        )
+        return self._commit(m, epoch_key, written, reset=True, schema=schema.json())
 
     def apply_batch(
         self,
@@ -1244,7 +1213,7 @@ class ParquetLakeTable:
         (compacted into a new base), while the others receive the
         reduced batch as a delta (O(batch) bytes written). One exchange
         per epoch (two tiers when salted). Exactly-once via the epoch
-        check + atomic manifest rename. Pass ``affected`` (the batch's
+        check + atomic manifest commit (``_commit``). Pass ``affected`` (the batch's
         distinct bucket ids) when the caller already computed them —
         saves one job per epoch. ``salt_partitions`` → two-phase reduce
         for pathological hot keys.
@@ -1281,26 +1250,10 @@ class ParquetLakeTable:
         else:
             affected = sorted(affected)
         if not affected:  # empty batch still commits the epoch (≙ empty poll)
-            version = m["version"] + 1
-            self._write_manifest(
-                {**m, "version": version, "epoch_key": epoch_key,
-                 **self._epochs_after_commit(m, epoch_key, version)}
-            )
-            return CommitStats(version, epoch_key, True)
-
-        version = m["version"] + 1
-        # unique dir per attempt (same reason as compact/overwrite): an
-        # ingest writer racing another to the same next version must not
-        # share data/v{N} — mode('overwrite') would destroy the CAS
-        # winner's committed files. Losing attempts leave orphan dirs
-        # that vacuum grace-ages; reload-and-retry on conflict is safe.
-        data_dir = f"data/v{version}-i{uuid.uuid4().hex[:8]}"
-        buckets = dict(m["buckets"])
-        bucket_counts = dict(m["bucket_counts"])
-        deltas = {b: list(ds) for b, ds in m.get("deltas", {}).items()}
-        delta_counts = dict(m.get("delta_counts", {}))
+            return self._commit(m, epoch_key, affected=[])
         if m.get("mode", "cow") == "mor":
             budget = int(m.get("compact_every", 8))
+            deltas = m.get("deltas", {})
             rewrite = [
                 b for b in affected if len(deltas.get(str(b), [])) + 1 >= budget
             ]
@@ -1313,38 +1266,11 @@ class ParquetLakeTable:
         rows = align_to_schema(resolved, phys)
         if rewrite:
             rows = rows.unionByName(self._scan(m, rewrite, schema=phys)[0])
-        counts = self._write_version_data(
+        written = self._write_version_data(
             self._merge(rows, m, m["n_buckets"], len(affected), salt_partitions),
-            m, data_dir, len(affected),
+            m, "i", len(affected),
         )
-        for b in affected:
-            bs = str(b)
-            if b in rewrite:  # new base (or the bucket folded to nothing)
-                deltas.pop(bs, None)
-                delta_counts.pop(bs, None)
-                if b in counts:
-                    buckets[bs] = data_dir
-                    bucket_counts[bs] = counts[b]
-                else:
-                    buckets.pop(bs, None)
-                    bucket_counts.pop(bs, None)
-            elif b in counts:  # mor: the reduced batch is a new delta
-                deltas.setdefault(bs, []).append(data_dir)
-                delta_counts[bs] = delta_counts.get(bs, 0) + counts[b]
-
-        self._write_manifest(
-            {
-                **m,
-                "version": version,
-                "epoch_key": epoch_key,
-                "schema": new_schema.json(),
-                "buckets": buckets,
-                "bucket_counts": bucket_counts,
-                "deltas": deltas,
-                "delta_counts": delta_counts,
-                **self._epochs_after_commit(m, epoch_key, version),
-            }
-        )
-        return CommitStats(
-            version, epoch_key, True, affected, counts, sum(counts.values())
+        return self._commit(
+            m, epoch_key, written, rewrite=rewrite, affected=affected,
+            schema=new_schema.json(),
         )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from go_cdc_spark import schemas
 from go_cdc_spark.bookmark import BookmarkRow, BookmarkStore
 from go_cdc_spark.config import PipelineConfig
+from go_cdc_spark.operators.resolve import apply_filters
 from go_cdc_spark.sinks.lake import ParquetLakeTable
 from go_cdc_spark.sources.oplog import list_segments, plan_chunks, read_chunk
 
@@ -194,11 +195,14 @@ def replay_streaming(
     )
     from go_cdc_spark.streaming.monitor import _read_source
 
-    reader = _read_source(
-        spark.readStream.schema(stream_schema).option(
-            "maxFilesPerTrigger", max_files_per_trigger
+    reader = apply_filters(
+        _read_source(
+            spark.readStream.schema(stream_schema).option(
+                "maxFilesPerTrigger", max_files_per_trigger
+            ),
+            cfg,
         ),
-        cfg,
+        cfg.filters,
     )
 
     def body(batch_df: DataFrame, epoch_id: int):
@@ -274,5 +278,5 @@ def run_pipeline(
         BookmarkRow(cfg.pipeline_id, -2, *schemas.ZERO_TOKEN, stage="init", status="success")
     )
     if source_df is not None:
-        run_snapshot(source_df, lake, bookmarks)
+        run_snapshot(source_df, lake, bookmarks, filters=cfg.filters)
     return replay_chunked(spark, cfg, chunk_segments=chunk_segments)

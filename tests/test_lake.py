@@ -1013,28 +1013,109 @@ def test_compact_fails_loudly_when_target_bucket_changed(spark, tmpdir_path):
     assert t.manifest()["deltas"] == {}
 
 
-def test_pending_stats_consumed_on_conflict_never_leak(tmpdir_path):
-    """Pending data-skipping stats are consumed by _write_manifest even
-    when the commit CAS loses: a later commit that writes no data must
-    not attach the failed batch's stats under a stale dir key. (No
-    Spark needed — the manifest layer is pure filesystem.)"""
+def test_pending_stats_consumed_on_conflict_never_leak(spark, tmpdir_path):
+    """A writer that loses the commit CAS after writing its data dir
+    leaves no stats behind: its next commit — one that writes no data —
+    must not record order/file stats for the loser's orphan dir."""
     import pytest
 
-    t = ParquetLakeTable(None, tmpdir_path)
-    os.makedirs(t._commits_dir)
-    t._pending_stats = {"0": [1, 2]}
-    t._pending_stats_dir = "data/vSTALE"
-    # a winner already holds version 1
-    with open(os.path.join(t._commits_dir, "v000000000001.json"), "w") as fh:
-        fh.write("{}")
-    losing = {"version": 1, "buckets": {"0": "data/vSTALE"}, "epochs": []}
-    with pytest.raises(RuntimeError, match="commit conflict"):
-        t._write_manifest(losing)
-    assert t._pending_stats is None  # consumed, not leaked
-    # later data-less commit: stale stats must not appear
-    t._write_manifest({"version": 2, "buckets": {"0": "data/vSTALE"}, "epochs": []})
-    m2 = t.manifest_at(2)
-    assert "data/vSTALE" not in m2.get("order_stats", {})
+    t1 = _table(spark, tmpdir_path)
+    t2 = ParquetLakeTable.load(spark, tmpdir_path)
+    real = t2._write_manifest
+    losing = []
+
+    def race_once(m):
+        # t1 commits the next version between t2's data write and its CAS
+        losing.append(m)
+        t1.apply_batch(_resolved(spark, [_row("i", 1, ("r1", "p", "c"), "w")]), "e1")
+        return real(m)
+
+    t2._write_manifest = race_once
+    try:
+        with pytest.raises(RuntimeError, match="commit conflict"):
+            t2.apply_batch(
+                _resolved(spark, [_row("i", 2, ("r2", "p", "c"), "l")]), "e2"
+            )
+    finally:
+        t2._write_manifest = real
+    (lost,) = losing
+    orphan = set(lost["buckets"].values()) - set(t1.manifest()["buckets"].values())
+    assert len(orphan) == 1 and os.path.isdir(os.path.join(tmpdir_path, *orphan))
+    assert orphan <= set(lost["order_stats"])  # the stats rode the lost write
+    s = t2.apply_batch(_resolved(spark, [_row("i", 3, ("r3", "p", "c"))]).limit(0), "e3")
+    assert s.applied and s.rows_written == 0
+    m = t2.manifest()
+    assert m["epochs"][-2:] == ["e1", "e3"]
+    assert not orphan & (set(m["order_stats"]) | set(m["file_stats"]))
+
+
+def _referenced(m):
+    return set(m["buckets"].values()) | {d for ds in m["deltas"].values() for d in ds}
+
+
+def _check_commit_stats(old, new, s):
+    """Stats keys ⊆ referenced dirs; the commit's dir carries order
+    stats for every non-empty bucket it holds; rows_written equals the
+    rows the new pointers to that dir account for."""
+    refs = _referenced(new)
+    assert set(new["order_stats"]) <= refs and set(new["file_stats"]) <= refs
+    fresh = refs - _referenced(old)
+    assert len(fresh) <= 1
+    rows = 0
+    for d in fresh:
+        for b, bd in new["buckets"].items():
+            if bd == d:
+                rows += new["bucket_counts"][b]
+                if new["bucket_counts"][b]:
+                    assert b in new["order_stats"].get(d, {}), (d, b)
+        for b, ds in new["deltas"].items():
+            if ds[-1] == d:
+                n = new["delta_counts"][b] - old["delta_counts"].get(b, 0)
+                rows += n
+                if n:
+                    assert b in new["order_stats"].get(d, {}), (d, b)
+    assert s.applied and s.version == new["version"]
+    assert s.rows_written == rows == sum(s.bucket_counts.values())
+
+
+def test_every_writer_commits_stats_only_for_referenced_dirs(spark, tmpdir_path):
+    """Every writer commits through one path: after a CoW epoch, a MoR
+    delta epoch, a MoR compaction epoch, compact(cluster_by), rebucket,
+    overwrite and an empty batch, the manifest's stats cover exactly
+    the live dirs and the commit's counts match its pointers."""
+
+    def batch(lo, n=12):
+        return _resolved(
+            spark, [_row("i", lo + i, (f"r{i}", "p", "c"), f"v{lo + i}") for i in range(n)]
+        )
+
+    def step(t, write):
+        old = t.manifest()
+        s = write()
+        new = t.manifest()
+        _check_commit_stats(old, new, s)
+        return new
+
+    cow = _table(spark, os.path.join(tmpdir_path, "cow"), n_buckets=4)
+    step(cow, lambda: cow.apply_batch(batch(0), "c1"))
+    step(cow, lambda: cow.apply_batch(batch(100, 5), "c2"))
+    mor = ParquetLakeTable.create(
+        spark, os.path.join(tmpdir_path, "mor"), schemas.TABLE_SCHEMA, K, 4,
+        mode="mor", compact_every=2,
+    )
+    m = step(mor, lambda: mor.apply_batch(batch(0), "m1"))  # delta
+    assert m["deltas"] and not m["buckets"]
+    m = step(mor, lambda: mor.apply_batch(batch(100), "m2"))  # compaction epoch
+    assert m["buckets"] and not m["deltas"]
+    m = step(mor, lambda: mor.apply_batch(batch(200), "m3"))  # delta on a base
+    assert m["deltas"]
+    m = step(mor, lambda: mor.compact(cluster_by=["ts_t"]))
+    assert not m["deltas"] and m["file_stats"]
+    m = step(mor, lambda: mor.rebucket(8))
+    assert m["n_buckets"] == 8 and not m["file_stats"]
+    snap = mor.read().withColumn("ts_t", F.lit(5).cast("long"))
+    step(mor, lambda: mor.overwrite(snap, "snap"))
+    step(mor, lambda: mor.apply_batch(batch(0).limit(0), "empty"))
 
 
 def test_vacuum_grace_ages_orphans_but_reclaims_superseded_now(

@@ -190,6 +190,42 @@ def test_streaming_kill_then_resume_from_checkpoint(spark, tmpdir_path):
     assert _fingerprint(lake) == _oracle_fp(spark, cfg.source_log_path)
 
 
+def test_config_filters_apply_on_every_replay_path(spark, tmpdir_path):
+    """``cfg.filters`` hold on dump and tail alike (≙ dumper.go:62-66,
+    collection.go:52-66): chunked, streaming and snapshot-then-tail
+    replays of one config each equal the oracle over the filtered log."""
+    from dataclasses import replace
+
+    from go_cdc_spark.operators.resolve import lww_resolve
+
+    base = _cfg(tmpdir_path, filters=[("repo", "$eq", "repo_00001")])
+    spec = LogSpec(n_events=3_000, segment_events=1_000, n_repos=4, dup_every=71, seed=23)
+    write_segments(spark, spec, base.source_log_path)
+    log = spark.read.parquet(base.source_log_path).drop("segment")
+    want = table_fingerprint(
+        replay_oracle(log.filter("repo = 'repo_00001'").toPandas())
+    )
+
+    def cfg_for(name):
+        return replace(
+            base, pipeline_id=name, table_root=os.path.join(tmpdir_path, name),
+            bookmark_root=os.path.join(tmpdir_path, f"{name}_bookmarks"),
+        )
+
+    chunked, stream, snap = cfg_for("chunked"), cfg_for("stream"), cfg_for("snap")
+    run_pipeline(spark, chunked)
+    ParquetLakeTable.create(spark, stream.table_root, schemas.TABLE_SCHEMA,
+                            stream.key_cols, stream.n_buckets)
+    replay_streaming(spark, stream, max_files_per_trigger=2).awaitTermination(120)
+    # the unfiltered source at dump time: other repos' rows must not land
+    src = lww_resolve(log.filter("seq < 1000"), schemas.KEY_COLS,
+                      schemas.ORDER_COLS, schemas.PAYLOAD_COLS)
+    run_pipeline(spark, snap, source_df=src.filter("op != 'd'").drop("op"))
+    for cfg in (chunked, stream, snap):
+        lake = ParquetLakeTable.load(spark, cfg.table_root)
+        assert _fingerprint(lake) == want, cfg.pipeline_id
+
+
 def test_json_source_replay_matches_parquet(spark, tmpdir_path):
     """JSON-lines oplog segments (≙ a Mongo change-stream export)
     replay to the identical final state as the parquet log — including
