@@ -1320,7 +1320,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Registry order is CHEAPEST-FIRST by profiled sf0.01 wall time
-    # (Spark + DuckDB oracle — BENCH/profile_correctness.py): the
+    # (Spark + DuckDB oracle — `python bench.py correctness`): the
     # driver's correctness loop runs entries in this order under a time
     # budget, so if a pass is ever truncated it drops the most
     # expensive tail queries instead of whole families (the round-4

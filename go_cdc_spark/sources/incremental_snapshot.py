@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from go_cdc_spark.bookmark import BookmarkRow, BookmarkStore
 from go_cdc_spark.config import PipelineConfig
+from go_cdc_spark.operators.resolve import apply_filters
 from go_cdc_spark.sinks.lake import ParquetLakeTable
 from go_cdc_spark.streaming.replay import EpochResult, replay_chunked
 
@@ -185,9 +186,20 @@ def incremental_snapshot_with_tail(
     applied chunk (stage recorded as ``snapshot-chunk`` in bookmarks).
     After the final chunk the remaining log is drained, so the returned
     state is fully caught up.
+
+    ``cfg.filters`` hold on the chunk rows as on the tail. A filter on a
+    column the source rows lack (``op``, the order stamps, …) has no
+    meaning for a SELECT and raises ``ValueError`` before anything is
+    copied.
     """
     import time
 
+    if cfg.filters:
+        missing = sorted({c for c, _, _ in cfg.filters} - set(select_source().columns))
+        if missing:
+            raise ValueError(
+                f"cfg.filters name columns the snapshot source lacks: {missing}"
+            )
     lake = ParquetLakeTable.load(spark, cfg.table_root)
     bookmarks = BookmarkStore(cfg.bookmark_root, cfg.pipeline_id)
     plans = _durable_plan(bookmarks, select_source, cfg.key_cols, n_chunks)
@@ -225,7 +237,9 @@ def incremental_snapshot_with_tail(
         hi = bookmarks.latest_token()
 
         t0 = time.time()
-        rows = _chunk_filter(select_source(), cfg.key_cols, plan)
+        rows = _chunk_filter(
+            apply_filters(select_source(), cfg.filters), cfg.key_cols, plan
+        )
         if hi > lo:
             # window dedup: the log already carries these keys' truth
             touched = _log_keys_between(spark, cfg, lake, lo, hi)

@@ -34,6 +34,7 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from go_cdc_spark import schemas
 from go_cdc_spark.config import PipelineConfig
+from go_cdc_spark.operators.resolve import apply_filters
 
 
 def _split_schema(schema: T.StructType, cfg: PipelineConfig):
@@ -199,11 +200,15 @@ def _emission_stream(
             state.setTimeoutDuration(tombstone_ttl_ms)
         yield pd.DataFrame([tuple(key) + cur], columns=out_cols)
 
-    reader = _read_source(
-        spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", max_files_per_trigger
+    # cfg.filters before the groupBy, so they push into the scan
+    reader = apply_filters(
+        _read_source(
+            spark.readStream.schema(schema).option(
+                "maxFilesPerTrigger", max_files_per_trigger
+            ),
+            cfg,
         ),
-        cfg,
+        cfg.filters,
     )
     timeout_conf = (
         GroupStateTimeout.NoTimeout

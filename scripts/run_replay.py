@@ -28,8 +28,8 @@ Modes:
     status    print bookmark HWM, lag, and throughput summary
 
 Local smoke (no cluster): spark-submit --master 'local[8]' ... works
-identically; bench_scaling.py uses exactly that to evidence the N→4N
-scaling rule in this sandbox.
+identically; ``python bench.py scaling`` uses exactly that to evidence
+the N→4N scaling rule in this sandbox.
 """
 
 from __future__ import annotations

@@ -192,11 +192,19 @@ def test_streaming_kill_then_resume_from_checkpoint(spark, tmpdir_path):
 
 def test_config_filters_apply_on_every_replay_path(spark, tmpdir_path):
     """``cfg.filters`` hold on dump and tail alike (≙ dumper.go:62-66,
-    collection.go:52-66): chunked, streaming and snapshot-then-tail
-    replays of one config each equal the oracle over the filtered log."""
+    collection.go:52-66): chunked, streaming, snapshot-then-tail,
+    stateful-materializer and incremental-snapshot replays of one config
+    each equal the oracle over the filtered log (plus, for the
+    incremental snapshot, its filtered source rows)."""
     from dataclasses import replace
 
+    import pandas as pd
+    import pytest
+    from pyspark.sql import functions as F
+
     from go_cdc_spark.operators.resolve import lww_resolve
+    from go_cdc_spark.sources.incremental_snapshot import incremental_snapshot_with_tail
+    from go_cdc_spark.streaming.stateful import materialize_stream_to_lake
 
     base = _cfg(tmpdir_path, filters=[("repo", "$eq", "repo_00001")])
     spec = LogSpec(n_events=3_000, segment_events=1_000, n_repos=4, dup_every=71, seed=23)
@@ -221,9 +229,32 @@ def test_config_filters_apply_on_every_replay_path(spark, tmpdir_path):
     src = lww_resolve(log.filter("seq < 1000"), schemas.KEY_COLS,
                       schemas.ORDER_COLS, schemas.PAYLOAD_COLS)
     run_pipeline(spark, snap, source_df=src.filter("op != 'd'").drop("op"))
-    for cfg in (chunked, stream, snap):
+    statemat, inc = cfg_for("statemat"), cfg_for("inc")
+    for cfg in (statemat, inc):
+        ParquetLakeTable.create(spark, cfg.table_root, schemas.TABLE_SCHEMA,
+                                cfg.key_cols, cfg.n_buckets)
+    materialize_stream_to_lake(spark, statemat).awaitTermination(120)
+    # live source rows under keys no log event touches, every repo present
+    live = src.filter("op != 'd'").select(
+        "repo", F.concat(F.lit("snap/"), "path").alias("path"), "commit",
+        *schemas.PAYLOAD_COLS,
+    )
+    incremental_snapshot_with_tail(spark, inc, lambda: live, n_chunks=2)
+    for cfg in (chunked, stream, snap, statemat):
         lake = ParquetLakeTable.load(spark, cfg.table_root)
         assert _fingerprint(lake) == want, cfg.pipeline_id
+    want_inc = table_fingerprint(pd.concat([
+        replay_oracle(log.filter("repo = 'repo_00001'").toPandas()),
+        live.filter("repo = 'repo_00001'").toPandas(),
+    ]))
+    assert _fingerprint(ParquetLakeTable.load(spark, inc.table_root)) == want_inc
+    # a filter on an event-only column has no meaning for a SELECT
+    bad = replace(cfg_for("inc_bad"), filters=[("op", "$ne", "d")])
+    ParquetLakeTable.create(spark, bad.table_root, schemas.TABLE_SCHEMA,
+                            bad.key_cols, bad.n_buckets)
+    with pytest.raises(ValueError, match="op"):
+        incremental_snapshot_with_tail(spark, bad, lambda: live, n_chunks=2)
+    assert ParquetLakeTable.load(spark, bad.table_root).committed_epochs() == {"__create__"}
 
 
 def test_json_source_replay_matches_parquet(spark, tmpdir_path):
